@@ -91,8 +91,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 OFF10 = 1_000_000_000_000_000
 OFF20 = 2 * OFF10
 
-_MAX_REL_PASSES = 12
-
 
 def _parse_args(argv: list[str]) -> dict:
     opts = {
@@ -423,46 +421,6 @@ def _inside_nodes(nodes: DataFrame, opts: dict) -> DataFrame:
     return nodes
 
 
-def _rel_keep_closure(
-    rels: DataFrame, direct: DataFrame
-) -> DataFrame:
-    """Inter-relation keep propagation (oo__rrprocessing,
-    osmconvert.c:9083-9131): a relation whose RELATION member is
-    kept becomes kept, to a fixpoint. The rel->rel edge set is tiny
-    relative to the data (relations referencing relations), so each
-    pass is one broadcast-able semi-join; one driver job per pass
-    via localCheckpoint, capped like the reference's maxrewind."""
-    edges = (
-        rels.select("id", F.explode("members").alias("m"))
-        .filter(F.col("m.mtype") == "relation")
-        .select("id", F.col("m.ref").alias("ref"))
-        .localCheckpoint(eager=True)
-    )
-    kept = direct.localCheckpoint(eager=True)
-    for _ in range(_MAX_REL_PASSES):
-        grown = (
-            edges.join(
-                kept.select(F.col("id").alias("ref")), "ref", "left_semi"
-            )
-            .select("id")
-            .unionByName(kept)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if grown.count() == kept.count():
-            return grown
-        kept = grown
-    import warnings
-
-    warnings.warn(
-        "relation keep closure did not converge within "
-        f"{_MAX_REL_PASSES} passes (reference maxrewind behavior: "
-        "deeper hierarchies stay dropped)",
-        stacklevel=2,
-    )
-    return kept
-
-
 def _apply_spatial(nodes, ways, rels, opts):
     """Border / ref-graph stage. Returns the kept (nodes, ways,
     rels). --drop-broken-refs alone activates the keep-hash exactly
@@ -472,6 +430,22 @@ def _apply_spatial(nodes, ways, rels, opts):
     hash_active = spatial or opts["drop_broken_refs"]
     if not hash_active:
         return nodes, ways, rels
+    from .operators.graph import rel_closure_up
+
+    # inter-relation keep propagation (oo__rrprocessing,
+    # osmconvert.c:9083-9131): a relation whose RELATION member is
+    # kept becomes kept, to a fixpoint capped like maxrewind
+    rel_edges = (
+        rels.select(F.col("id").alias("rel_id"),
+                    F.explode("members").alias("m"))
+        .filter(F.col("m.mtype") == "relation")
+        .select("rel_id", F.col("m.ref").alias("child_rel"))
+    )
+
+    def keep_closure(direct: DataFrame) -> DataFrame:
+        return rel_closure_up(
+            rel_edges, direct.select(F.col("id").alias("rel_id"))
+        ).select(F.col("rel_id").alias("id"))
 
     inside = _inside_nodes(nodes, opts) if spatial else nodes
 
@@ -514,7 +488,7 @@ def _apply_spatial(nodes, ways, rels, opts):
             )
             .distinct()
         )
-        rel1 = _rel_keep_closure(rels, direct1)
+        rel1 = keep_closure(direct1)
         type_val = F.try_element_at(F.col("tags"), F.lit("type"))
         qual_type = F.lit(False)
         if opts["complete_mp"]:
@@ -599,7 +573,7 @@ def _apply_spatial(nodes, ways, rels, opts):
         )
         .distinct()
     )
-    kept_rel_ids = _rel_keep_closure(rels, direct)
+    kept_rel_ids = keep_closure(direct)
     rels = rels.join(kept_rel_ids, "id", "left_semi")
 
     if opts["drop_broken_refs"]:
@@ -707,32 +681,12 @@ _AREA_KEYS = ("highway", "waterway", "railway", "aerialway", "power",
               "route")
 
 
-def _rel_centers(
-    rels: DataFrame, node_pos: DataFrame, way_pos: DataFrame
-) -> DataFrame:
-    """Relation center nodes (id + OFF20) by iterative member-
-    position resolution (posr_processing, osmconvert.c:6917-7070):
-
-    - member positions: node -> node coord, way -> way CENTER,
-      relation -> that relation's (already resolved) center;
-    - a relation resolves only once ALL its relation-type members
-      are resolved; members referencing missing relations (or
-      cycles) never resolve, so those relations are dropped —
-      exactly the reference's posi_nil behavior;
-    - node/way members with unknown positions are silently
-      skipped; a relation needs >= 1 valid member position;
-    - is_area = no highway/waterway/railway/aerialway/power/route
-      key, or area=yes (osmconvert.c:11752-11766); area relations
-      take the trunc-division bbox middle of their member
-      positions, NON-area relations take the LAST valid member's
-      position — replicating the reference's scan at
-      osmconvert.c:6977-6994, whose distance loop never updates
-      its candidate and therefore always keeps the final member.
-
-    One driver job per pass (localCheckpoint + count), bounded like
-    maxrewind. Plain min/max bbox: the reference's 9e8 anti-
-    wraparound guard (osmconvert.c:7036-7060) only diverges on
-    member spreads wider than 90 degrees of longitude."""
+def _rel_members(rels: DataFrame) -> DataFrame:
+    """The relations as operators/graph.rel_geometry members: node
+    members keyed by node id, way members by their center
+    pseudo-node id (way id + OFF10), relation members by relation
+    id. is_area = no highway/waterway/railway/aerialway/power/route
+    key, or area=yes (osmconvert.c:11752-11766)."""
     has_hw = F.arrays_overlap(
         F.map_keys("tags"),
         F.array(*[F.lit(k) for k in _AREA_KEYS]),
@@ -741,178 +695,70 @@ def _rel_centers(
         F.try_element_at("tags", F.lit("area")) == F.lit("yes"),
         F.lit(False),
     )
-    is_area = (~has_hw) | has_area
-    mem = rels.select(
-        "id",
-        is_area.alias("is_area"),
+    return rels.select(
+        F.col("id").alias("rel_id"),
+        ((~has_hw) | has_area).alias("is_area"),
         F.posexplode("members").alias("j", "m"),
     ).select(
-        "id",
-        "is_area",
+        "rel_id",
         "j",
         F.when(F.col("m.mtype") == "way", F.col("m.ref") + OFF10)
-        .when(F.col("m.mtype") == "relation", F.col("m.ref") + OFF20)
         .otherwise(F.col("m.ref"))
-        .alias("pos_id"),
+        .alias("ref_id"),
+        (F.col("m.mtype") == "relation").alias("is_rel"),
+        "is_area",
     )
-    off15 = OFF10 + OFF10 // 2
 
-    # STATIC half, aggregated exactly once: node/way member
-    # positions never change across passes, so their bbox partials
-    # and last-valid candidate collapse to one row per relation
-    # before the loop — the corpus-sized joins stay OUT of the
-    # fixpoint (the rel->rel layer the loop iterates on is tiny by
-    # comparison).
-    positions = node_pos.select(
-        F.col("id").alias("pos_id"), "lon_i", "lat_i"
+
+def _member_positions(nodes, way_nodes, way_boxes=None):
+    """rel_geometry positions of node and way members, ways at
+    their center pseudo-nodes. With way_boxes each also carries its
+    box: a node's point, a way's bbox over its resolvable refs."""
+    pos = nodes.select(
+        F.col("id").alias("ref_id"),
+        F.col("lon_i").alias("x"),
+        F.col("lat_i").alias("y"),
+    )
+    wpos = way_nodes.select(
+        F.col("id").alias("ref_id"),
+        F.col("lon_i").alias("x"),
+        F.col("lat_i").alias("y"),
+    )
+    if way_boxes is None:
+        return pos.unionByName(wpos)
+    return pos.select(
+        "*",
+        F.col("x").alias("x_min"),
+        F.col("y").alias("y_min"),
+        F.col("x").alias("x_max"),
+        F.col("y").alias("y_max"),
     ).unionByName(
-        way_pos.select(
-            F.col("id").alias("pos_id"), "lon_i", "lat_i"
-        )
-    )
-    stat = (
-        mem.filter(F.col("pos_id") < off15)
-        .join(positions, "pos_id")
-        .groupBy("id")
-        .agg(
-            F.min("lon_i").alias("sx_min"),
-            F.max("lon_i").alias("sx_max"),
-            F.min("lat_i").alias("sy_min"),
-            F.max("lat_i").alias("sy_max"),
-            F.max_by(
-                F.struct("j", "lon_i", "lat_i"), F.col("j")
-            ).alias("slast"),
-            F.count("*").cast("long").alias("s_n"),
-        )
-    )
-    mem_rel = mem.filter(F.col("pos_id") >= off15).select(
-        "id", "j", (F.col("pos_id") - OFF20).alias("child")
-    )
-    spine = (
-        mem.groupBy("id")
-        .agg(F.first("is_area").alias("is_area"))
-        .join(
-            mem_rel.groupBy("id").agg(
-                F.count("*").cast("long").alias("n_rel")
+        wpos.join(
+            way_boxes.select(
+                (F.col("id") + OFF10).alias("ref_id"),
+                "x_min", "y_min", "x_max", "y_max",
             ),
-            "id",
-            "left",
+            "ref_id",
         )
-        .join(stat, "id", "left")
-        .withColumn("n_rel", F.coalesce("n_rel", F.lit(0)))
-        .localCheckpoint(eager=True)
     )
-    mem_rel = mem_rel.localCheckpoint(eager=True)
 
-    # fixpoint over the rel->rel layer only: one eager checkpoint
-    # (job) per pass; `done` and `resolved` stay lazy unions of the
-    # <= _MAX_REL_PASSES checkpointed batches
-    done = None  # resolved centers (id = rel_id + OFF20)
-    for _ in range(_MAX_REL_PASSES):
-        if done is None:
-            probe = mem_rel.limit(0).select(
-                "id",
-                "j",
-                F.lit(0).cast("long").alias("lon_i"),
-                F.lit(0).cast("long").alias("lat_i"),
-            )
-        else:
-            probe = mem_rel.join(
-                done.select(
-                    (F.col("id") - OFF20).alias("child"),
-                    "lon_i",
-                    "lat_i",
-                ),
-                "child",
-            ).select("id", "j", "lon_i", "lat_i")
-        ragg = probe.groupBy("id").agg(
-            F.min("lon_i").alias("rx_min"),
-            F.max("lon_i").alias("rx_max"),
-            F.min("lat_i").alias("ry_min"),
-            F.max("lat_i").alias("ry_max"),
-            F.max_by(
-                F.struct("j", "lon_i", "lat_i"), F.col("j")
-            ).alias("rlast"),
-            F.count("*").cast("long").alias("n_matched"),
-        )
-        cand = spine.join(ragg, "id", "left").filter(
-            (F.coalesce("n_matched", F.lit(0)) == F.col("n_rel"))
-            & (
-                F.coalesce("s_n", F.lit(0))
-                + F.coalesce("n_matched", F.lit(0))
-                > 0
-            )
-        )
-        if done is not None:
-            cand = cand.join(
-                done.select((F.col("id") - OFF20).alias("id")),
-                "id",
-                "left_anti",
-            )
-        last = F.when(
-            F.col("rlast").isNull()
-            | (
-                F.col("slast").isNotNull()
-                & (F.col("slast.j") > F.col("rlast.j"))
-            ),
-            F.col("slast"),
-        ).otherwise(F.col("rlast"))
-        x_min = F.least(
-            F.coalesce("sx_min", F.col("rx_min")),
-            F.coalesce("rx_min", F.col("sx_min")),
-        )
-        x_max = F.greatest(
-            F.coalesce("sx_max", F.col("rx_max")),
-            F.coalesce("rx_max", F.col("sx_max")),
-        )
-        y_min = F.least(
-            F.coalesce("sy_min", F.col("ry_min")),
-            F.coalesce("ry_min", F.col("sy_min")),
-        )
-        y_max = F.greatest(
-            F.coalesce("sy_max", F.col("ry_max")),
-            F.coalesce("ry_max", F.col("sy_max")),
-        )
-        batch = cand.select(
-            (F.col("id") + OFF20).alias("id"),
-            F.col("is_area"),
-            x_min.alias("x_min"),
-            x_max.alias("x_max"),
-            y_min.alias("y_min"),
-            y_max.alias("y_max"),
-            last.alias("last"),
-        ).select(
-            "id",
-            F.when(
-                F.col("is_area"),
-                F.expr("x_max div 2 + x_min div 2"),
-            )
-            .otherwise(F.col("last.lon_i"))
-            .alias("lon_i"),
-            F.when(
-                F.col("is_area"),
-                F.expr("(y_max + y_min) div 2"),
-            )
-            .otherwise(F.col("last.lat_i"))
-            .alias("lat_i"),
-        ).localCheckpoint(eager=True)
-        if batch.count() == 0:
-            break
-        done = (
-            batch if done is None else done.unionByName(batch)
-        )
+
+def _rel_nodes(rels: DataFrame, geo: DataFrame) -> DataFrame:
+    """Relation center nodes (id + OFF20) from rel_geometry output;
+    they keep the relation's tags and author metadata, and the box
+    columns ride along. Relations that never resolve (a missing or
+    cyclic relation member, no valid member) have no node — the
+    reference's posi_nil behavior."""
     extra = [c for c in rels.columns if c not in ("id", "members")]
-    if done is None:
-        return rels.select(
-            "id",
-            F.lit(0).cast("long").alias("lat_i"),
-            F.lit(0).cast("long").alias("lon_i"),
-            *extra,
-        ).limit(0)
-    return done.join(
-        rels.select((F.col("id") + OFF20).alias("id"), *extra),
-        "id",
-    ).select("id", "lat_i", "lon_i", *extra)
+    return geo.join(
+        rels.select(F.col("id").alias("rel_id"), *extra), "rel_id"
+    ).select(
+        (F.col("rel_id") + OFF20).alias("id"),
+        F.col("y").alias("lat_i"),
+        F.col("x").alias("lon_i"),
+        "x_min", "y_min", "x_max", "y_max",
+        *extra,
+    )
 
 
 def _read_parameter_file(path: str) -> list[str]:
@@ -1046,249 +892,27 @@ def _prepend_bbox_tags(df: DataFrame, which: list[str]) -> DataFrame:
     ).drop("x_min", "y_min", "x_max", "y_max")
 
 
-def _rel_boxes_centers(
-    rels: DataFrame,
-    node_pos: DataFrame,
-    way_pos: DataFrame,
-    way_boxes: DataFrame,
-) -> DataFrame:
-    """Relation bbox + bbox-mode center by iterative member
-    resolution — the global_calccoords=-1 variant of _rel_centers
-    (posr x_min/x_max tracking, osmconvert.c:6917-7070 with
-    --add-bbox* active):
-
-    - every member carries a POSITION (node coord / way center /
-      child rel center) and a BOX (node point / way bbox / child
-      rel union box);
-    - the relation's box is the UNION of member boxes;
-    - its center is the trunc-division middle of that UNION box
-      for area relations — NOT the middle of member positions,
-      which is what plain --all-to-nodes uses (verified against
-      the binary: rel of way(20..21,10..11)+node(22,12) centers
-      at (21,11) with bbox tags on, (21.3,11.25) without) — and
-      the LAST valid member's position for non-area relations
-      (same as plain mode);
-    - resolution rule unchanged: all relation-type members must
-      resolve, >= 1 valid member, bounded passes.
-
-    Output: (id [rel_id + OFF20], lon_i, lat_i, x_min, y_min,
-    x_max, y_max)."""
-    has_hw = F.arrays_overlap(
-        F.map_keys("tags"),
-        F.array(*[F.lit(k) for k in _AREA_KEYS]),
-    )
-    has_area = F.coalesce(
-        F.try_element_at("tags", F.lit("area")) == F.lit("yes"),
-        F.lit(False),
-    )
-    is_area = (~has_hw) | has_area
-    mem = rels.select(
-        "id",
-        is_area.alias("is_area"),
-        F.posexplode("members").alias("j", "m"),
-    ).select(
-        "id",
-        "is_area",
-        "j",
-        F.when(F.col("m.mtype") == "way", F.col("m.ref") + OFF10)
-        .when(F.col("m.mtype") == "relation", F.col("m.ref") + OFF20)
-        .otherwise(F.col("m.ref"))
-        .alias("pos_id"),
-    )
-    off15 = OFF10 + OFF10 // 2
-
-    # static member values: position + box per node/way member
-    nvals = node_pos.select(
-        F.col("id").alias("pos_id"),
-        "lon_i",
-        "lat_i",
-        F.col("lon_i").alias("x_min"),
-        F.col("lat_i").alias("y_min"),
-        F.col("lon_i").alias("x_max"),
-        F.col("lat_i").alias("y_max"),
-    )
-    wvals = way_pos.join(
-        way_boxes.select(
-            (F.col("id") + OFF10).alias("id"),
-            "x_min", "y_min", "x_max", "y_max",
-        ),
-        "id",
-    ).select(
-        F.col("id").alias("pos_id"),
-        "lon_i", "lat_i", "x_min", "y_min", "x_max", "y_max",
-    )
-    vals = nvals.unionByName(wvals)
-    stat = (
-        mem.filter(F.col("pos_id") < off15)
-        .join(vals, "pos_id")
-        .groupBy("id")
-        .agg(
-            F.min("x_min").alias("sx_min"),
-            F.max("x_max").alias("sx_max"),
-            F.min("y_min").alias("sy_min"),
-            F.max("y_max").alias("sy_max"),
-            F.max_by(
-                F.struct("j", "lon_i", "lat_i"), F.col("j")
-            ).alias("slast"),
-            F.count("*").cast("long").alias("s_n"),
-        )
-    )
-    mem_rel = mem.filter(F.col("pos_id") >= off15).select(
-        "id", "j", (F.col("pos_id") - OFF20).alias("child")
-    )
-    spine = (
-        mem.groupBy("id")
-        .agg(F.first("is_area").alias("is_area"))
-        .join(
-            mem_rel.groupBy("id").agg(
-                F.count("*").cast("long").alias("n_rel")
-            ),
-            "id",
-            "left",
-        )
-        .join(stat, "id", "left")
-        .withColumn("n_rel", F.coalesce("n_rel", F.lit(0)))
-        .localCheckpoint(eager=True)
-    )
-    mem_rel = mem_rel.localCheckpoint(eager=True)
-
-    done = None
-    for _ in range(_MAX_REL_PASSES):
-        if done is None:
-            probe = mem_rel.limit(0).select(
-                "id",
-                "j",
-                *[
-                    F.lit(0).cast("long").alias(c)
-                    for c in (
-                        "lon_i", "lat_i",
-                        "x_min", "y_min", "x_max", "y_max",
-                    )
-                ],
-            )
-        else:
-            probe = mem_rel.join(
-                done.select(
-                    (F.col("id") - OFF20).alias("child"),
-                    "lon_i", "lat_i",
-                    "x_min", "y_min", "x_max", "y_max",
-                ),
-                "child",
-            ).select(
-                "id", "j", "lon_i", "lat_i",
-                "x_min", "y_min", "x_max", "y_max",
-            )
-        ragg = probe.groupBy("id").agg(
-            F.min("x_min").alias("rx_min"),
-            F.max("x_max").alias("rx_max"),
-            F.min("y_min").alias("ry_min"),
-            F.max("y_max").alias("ry_max"),
-            F.max_by(
-                F.struct("j", "lon_i", "lat_i"), F.col("j")
-            ).alias("rlast"),
-            F.count("*").cast("long").alias("n_matched"),
-        )
-        cand = spine.join(ragg, "id", "left").filter(
-            (F.coalesce("n_matched", F.lit(0)) == F.col("n_rel"))
-            & (
-                F.coalesce("s_n", F.lit(0))
-                + F.coalesce("n_matched", F.lit(0))
-                > 0
-            )
-        )
-        if done is not None:
-            cand = cand.join(
-                done.select((F.col("id") - OFF20).alias("id")),
-                "id",
-                "left_anti",
-            )
-        last = F.when(
-            F.col("rlast").isNull()
-            | (
-                F.col("slast").isNotNull()
-                & (F.col("slast.j") > F.col("rlast.j"))
-            ),
-            F.col("slast"),
-        ).otherwise(F.col("rlast"))
-        x_min = F.least(
-            F.coalesce("sx_min", F.col("rx_min")),
-            F.coalesce("rx_min", F.col("sx_min")),
-        )
-        x_max = F.greatest(
-            F.coalesce("sx_max", F.col("rx_max")),
-            F.coalesce("rx_max", F.col("sx_max")),
-        )
-        y_min = F.least(
-            F.coalesce("sy_min", F.col("ry_min")),
-            F.coalesce("ry_min", F.col("sy_min")),
-        )
-        y_max = F.greatest(
-            F.coalesce("sy_max", F.col("ry_max")),
-            F.coalesce("ry_max", F.col("sy_max")),
-        )
-        batch = cand.select(
-            (F.col("id") + OFF20).alias("id"),
-            F.col("is_area"),
-            x_min.alias("x_min"),
-            x_max.alias("x_max"),
-            y_min.alias("y_min"),
-            y_max.alias("y_max"),
-            last.alias("last"),
-        ).select(
-            "id",
-            F.when(
-                F.col("is_area"),
-                F.expr("x_max div 2 + x_min div 2"),
-            )
-            .otherwise(F.col("last.lon_i"))
-            .alias("lon_i"),
-            F.when(
-                F.col("is_area"),
-                F.expr("(y_max + y_min) div 2"),
-            )
-            .otherwise(F.col("last.lat_i"))
-            .alias("lat_i"),
-            "x_min", "y_min", "x_max", "y_max",
-        ).localCheckpoint(eager=True)
-        if batch.count() == 0:
-            break
-        done = (
-            batch if done is None else done.unionByName(batch)
-        )
-    if done is None:
-        return rels.select(
-            "id",
-            *[
-                F.lit(0).cast("long").alias(c)
-                for c in (
-                    "lon_i", "lat_i",
-                    "x_min", "y_min", "x_max", "y_max",
-                )
-            ],
-        ).limit(0)
-    return done
-
-
 def _apply_bbox_tags(nodes, ways, rels, which):
     """Plain --add-bbox* mode: ways and relations get the selected
     tags prepended in place; nodes untouched (verified against the
     binary)."""
+    from .operators.graph import rel_geometry
+
     wb = _way_boxes(ways, nodes)
+    geo = rel_geometry(
+        _rel_members(rels),
+        _member_positions(
+            nodes, _way_centers(ways.select("id", "refs"), nodes), wb
+        ),
+        hand_up_box=True,
+    )
     ways = _prepend_bbox_tags(
         ways.join(wb, "id", "left"), which
     )
-    rb = _rel_boxes_centers(
-        rels,
-        nodes.select("id", "lon_i", "lat_i"),
-        _way_centers(
-            ways.select("id", "refs"), nodes
-        ).select("id", "lon_i", "lat_i"),
-        wb,
-    )
     rels = _prepend_bbox_tags(
         rels.join(
-            rb.select(
-                (F.col("id") - OFF20).alias("id"),
+            geo.select(
+                F.col("rel_id").alias("id"),
                 "x_min", "y_min", "x_max", "y_max",
             ),
             "id",
@@ -1304,8 +928,13 @@ def _all_to_nodes_bbox(
 ):
     """--all-to-nodes combined with --add-bbox*: replacement
     nodes carry the bbox tags; relation centers switch to the
-    bbox-union middle (see _rel_boxes_centers); original nodes
-    stay untagged."""
+    middle of the union of member boxes — NOT the middle of member
+    positions, which is what plain --all-to-nodes uses (verified
+    against the binary: rel of way(20..21,10..11)+node(22,12)
+    centers at (21,11) with bbox tags on, (21.3,11.25) without);
+    original nodes stay untagged."""
+    from .operators.graph import rel_geometry
+
     way_nodes = _way_centers(ways, nodes)
     wb = _way_boxes(ways, nodes)
     way_nodes = _prepend_bbox_tags(
@@ -1319,20 +948,12 @@ def _all_to_nodes_bbox(
         ),
         which,
     )
-    rb = _rel_boxes_centers(
-        rels,
-        nodes.select("id", "lon_i", "lat_i"),
-        way_nodes.select("id", "lon_i", "lat_i"),
-        wb,
+    geo = rel_geometry(
+        _rel_members(rels),
+        _member_positions(nodes, way_nodes, wb),
+        hand_up_box=True,
     )
-    extra = [c for c in rels.columns if c not in ("id", "members")]
-    rel_nodes = _prepend_bbox_tags(
-        rb.join(
-            rels.select((F.col("id") + OFF20).alias("id"), *extra),
-            "id",
-        ),
-        which,
-    ).select("id", "lat_i", "lon_i", *extra)
+    rel_nodes = _prepend_bbox_tags(_rel_nodes(rels, geo), which)
     way_nodes, rel_nodes = _remap_pseudo_ids(
         way_nodes, rel_nodes, off, step
     )
@@ -1383,12 +1004,18 @@ def _remap_pseudo_ids(way_nodes, rel_nodes, off, step):
 
 
 def _all_to_nodes(nodes, ways, rels, off=None, step=False):
+    """--all-to-nodes: way centers, then relation centers by the
+    member-position fixpoint (posr_processing,
+    osmconvert.c:6917-7070)."""
+    from .operators.graph import rel_geometry
+
     way_nodes = _way_centers(ways, nodes)
-    rel_nodes = _rel_centers(
+    rel_nodes = _rel_nodes(
         rels,
-        nodes.select("id", "lon_i", "lat_i"),
-        way_nodes.select("id", "lon_i", "lat_i"),
-    )
+        rel_geometry(
+            _rel_members(rels), _member_positions(nodes, way_nodes)
+        ),
+    ).drop("x_min", "y_min", "x_max", "y_max")
     way_nodes, rel_nodes = _remap_pseudo_ids(
         way_nodes, rel_nodes, off, step
     )

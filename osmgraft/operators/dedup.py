@@ -299,97 +299,6 @@ def incremental_near_dups(
     )
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    a_col: str = "a",
-    b_col: str = "b",
-    max_passes: int = 12,
-) -> DataFrame:
-    """Resolve candidate near-dup pairs into clusters: connected
-    components by iterative min-label propagation (the standard
-    dedup-resolution step after LSH). Returns (doc_id, cluster)
-    where cluster = min doc id of the component — the KEEPER;
-    every other member is a duplicate to drop.
-
-    Scale: each pass is one shuffle of (node, label) joined against
-    the symmetrized edge list; near-dup components are tiny (dup
-    groups), so convergence is fast (diameter passes, <= 12 like
-    the engine's other fixed points) and localCheckpoint keeps
-    lineage flat."""
-    edges = (
-        pairs.select(
-            F.col(a_col).alias("u"), F.col(b_col).alias("v")
-        )
-        .unionByName(
-            pairs.select(
-                F.col(b_col).alias("u"), F.col(a_col).alias("v")
-            )
-        )
-        .distinct()
-        .persist()
-    )
-    labels = (
-        edges.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("cluster", F.col("node"))
-        .localCheckpoint(eager=False)
-    )
-    def step(lbl: DataFrame) -> DataFrame:
-        nm = (
-            edges.join(
-                lbl.select(
-                    F.col("node").alias("v"),
-                    F.col("cluster").alias("vc"),
-                ),
-                "v",
-            )
-            .groupBy("u")
-            .agg(F.min("vc").alias("nc"))
-        )
-        return lbl.join(
-            nm.select(F.col("u").alias("node"), "nc"),
-            "node",
-            "left",
-        ).select(
-            *[c for c in lbl.columns if c != "cluster"],
-            F.least(
-                F.col("cluster"), F.coalesce("nc", F.col("cluster"))
-            ).alias("cluster"),
-        )
-
-    # TWO propagation steps fused per driver job (round 4): the
-    # changed flag compares against the label BEFORE the round, the
-    # lazy checkpoint + filtered count both materialize the round
-    # and drive convergence — same shuffle count as single steps,
-    # half the fixed per-job overhead. Labels only decrease, so a
-    # round that changes nothing is a true fixed point.
-    n_changed = 0
-    for _ in range((max_passes + 1) // 2):
-        cur = step(step(labels.withColumn("_orig", F.col("cluster"))))
-        updated = cur.select(
-            "node",
-            "cluster",
-            (F.col("cluster") < F.col("_orig")).alias("_chg"),
-        ).localCheckpoint(eager=False)
-        n_changed = updated.filter(F.col("_chg")).count()
-        labels = updated.select("node", "cluster")
-        if n_changed == 0:
-            break
-    if n_changed:
-        # mirrors the reference's recursion-cap warning
-        # (osmconvert.c:10637-10643): a component with diameter >
-        # max_passes is split into multiple clusters here.
-        _LOG.warning(
-            "dedup_clusters stopped at %d passes with %d labels "
-            "still changing; clusters of diameter > %d are split",
-            max_passes,
-            n_changed,
-            max_passes,
-        )
-    edges.unpersist()
-    return labels.select(F.col("node").alias("doc_id"), "cluster")
-
-
 def cluster_star(
     pairs: DataFrame,
     a_col: str = "a",
@@ -403,21 +312,21 @@ def cluster_star(
     small-star (hook u and its smaller neighbors to their
     minimum), until the edge set is a fixed point of stars
     centered at component minima. Returns (doc_id, cluster) with
-    cluster = min member — the same contract as dedup_clusters.
+    cluster = min member, the KEEPER; every other member is a
+    duplicate to drop. Nodes are the endpoints of non-loop pairs.
 
-    Why a second resolver: min-label propagation (dedup_clusters)
-    needs DIAMETER passes, and the engine caps it at 12 — a
-    pathological duplicate chain (A~B~C~... from incremental
-    crawls) longer than that gets split. Star contraction
+    The engine's only components resolver. Min-label propagation
+    needs DIAMETER passes, so a capped loop splits long duplicate
+    chains (A~B~C~... from incremental crawls); star contraction
     converges in O(log^2 n) rounds REGARDLESS of diameter: each
-    large+small round roughly halves every path, so a
-    million-node chain resolves in ~20 rounds where propagation
-    would need a million. Per round: two node-keyed groupBy-min
-    aggregates + one distinct — all bucketed by node id, no
-    broadcast state, nothing driver-side except the convergence
-    count. The production pick at 10^12 rows when cluster
-    diameter is unbounded; propagation stays the cheaper choice
-    for the shallow clusters LSH dup groups usually form."""
+    large+small round roughly halves every path, so a million-node
+    chain resolves in ~20 rounds where propagation would need a
+    million. Per round: two node-keyed groupBy-min aggregates + one
+    distinct — all bucketed by node id, no broadcast state, nothing
+    driver-side except the convergence count, carried from one
+    round to the next so each round counts its edge set once.
+    Hitting max_rounds without a fixed point logs a warning, like
+    the relation closure's cap."""
     edges = (
         pairs.select(
             F.greatest(F.col(a_col), F.col(b_col)).alias("u"),
@@ -459,6 +368,8 @@ def cluster_star(
             .distinct()
         )
 
+    n_old = edges.count()
+    converged = False
     for _ in range(max_rounds):
         new = small_star(large_star(edges)).localCheckpoint(
             eager=False
@@ -467,14 +378,13 @@ def cluster_star(
         # Both sides are distinct sets, so one count + one anti-join
         # probe decides equality.
         n_new = new.count()
-        n_old = edges.count()
-        if n_new == n_old and (
+        converged = n_new == n_old and (
             new.join(edges, ["u", "v"], "left_anti").limit(1).count()
             == 0
-        ):
-            edges = new
+        )
+        edges, n_old = new, n_new
+        if converged:
             break
-        edges = new
 
     members = edges.select(
         F.col("u").alias("doc_id"), F.col("v").alias("cluster")
@@ -482,18 +392,30 @@ def cluster_star(
     roots = edges.select(
         F.col("v").alias("doc_id"), F.col("v").alias("cluster")
     ).distinct()
-    return members.unionByName(roots).distinct()
+    out = members.unionByName(roots).distinct()
+    if not converged:
+        _LOG.warning(
+            "cluster_star stopped at %d rounds with %d edges not yet "
+            "in star form; components may be split",
+            max_rounds,
+            n_old,
+        )
+        # a node may still hang off several partial stars: keep its
+        # smallest label so the output stays one row per node
+        out = out.groupBy("doc_id").agg(
+            F.min("cluster").alias("cluster")
+        )
+    return out
 
 
 def dedup_keep_list(
     corpus: DataFrame,
     pairs: DataFrame,
     text_col: str = "text",
-    max_passes: int = 12,
 ) -> DataFrame:
     """The training-pipeline deliverable AFTER cluster resolution:
     a per-document keep/drop verdict. Clusters come from
-    dedup_clusters(pairs); within each cluster the KEEPER is the
+    cluster_star(pairs); within each cluster the KEEPER is the
     longest text (ties -> lowest doc_id) — the standard "keep the
     most complete copy" rule; every document outside any cluster is
     a singleton and keeps itself. Returns (doc_id, cluster, keep).
@@ -504,7 +426,7 @@ def dedup_keep_list(
     broadcastable (AQE converts them at runtime); the corpus itself
     never shuffles. The keeper argmax is an algebraic max_by, one
     partial-combined aggregation over the small clustered slice."""
-    clusters = dedup_clusters(pairs, max_passes=max_passes)
+    clusters = cluster_star(pairs)
     docs = corpus.select(
         "doc_id", F.length(F.col(text_col)).alias("_len")
     )

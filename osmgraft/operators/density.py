@@ -11,14 +11,11 @@ megacity-hotspot detector the north_rule's skew story calls for:
 the output is one row per occupied cell, so every downstream step
 is corpus-size independent.
 
-Cluster labels are the engine's bounded fixed-point idiom: 12
-passes of synchronous min-label propagation over the core
-adjacency graph (operators/dedup.dedup_clusters), which equals
-"min cell id within 12 hops" exactly — the DuckDB oracle mirrors
-that hop-bounded form with a pass-capped recursive CTE, so label
-equality holds whether or not a component converged (components
-wider than 12 hops are split identically in both engines, and the
-resolver logs its standard warning).
+Cluster labels are true connected components of the core
+adjacency graph, resolved by star contraction
+(operators/dedup.cluster_star): each cluster is labeled with its
+min core-cell id however wide it is. The DuckDB oracle is the
+recursive transitive closure over the same adjacency.
 
 Scale plan: ONE corpus-sized shuffle (the per-cell count); the
 neighborhood sum, core test, adjacency join, and label passes all
@@ -40,12 +37,11 @@ def grid_density_clusters(
     density_denom: int = 10,
     lat_col: str = "lat_i",
     lon_col: str = "lon_i",
-    max_passes: int = 12,
 ) -> DataFrame:
     """-> (cell, n_docs, nb9, is_core, cluster) per occupied cell;
     cluster is the min core-cell id of the component (null =
     noise). See module docstring for the exact semantics."""
-    from .dedup import dedup_clusters
+    from .dedup import cluster_star
 
     lon_bits = _lon_bits(shift)
     pack = 1 << lon_bits
@@ -108,9 +104,7 @@ def grid_density_clusters(
     edges = probe.join(
         core.select(F.col("cell").alias("b")), "b", "left_semi"
     )
-    labels = dedup_clusters(
-        edges, a_col="a", b_col="b", max_passes=max_passes
-    ).select(
+    labels = cluster_star(edges, a_col="a", b_col="b").select(
         F.col("doc_id").alias("cell"),
         F.col("cluster").alias("_lbl"),
     )

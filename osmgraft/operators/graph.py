@@ -11,6 +11,7 @@ Reference semantics (SURVEY.md §2.3/§2.5):
   G5  all-to-nodes way center         osmconvert.c:11561-11702
   G7  is_area (first ref == last)     osmconvert.c:11607
   A3  bbox aggregation                osmconvert.c:11573-11604
+  G6  relation geometry, <=12 passes  osmconvert.c:6917-7070
   R1  relation closure, <=12 passes   osmconvert.c:9083-9132
 
 Scale notes: the ways/relations side is exploded on refs and joined
@@ -259,97 +260,156 @@ def drop_broken_refs(
 
 
 # ---------------------------------------------------------------
-# G6/R3: relation geometry aggregation, <=12 fixed-point passes
+# G6/R3: relation geometry, <=12 fixed-point passes
 # ---------------------------------------------------------------
+
+_BOX = ("x_min", "y_min", "x_max", "y_max")
+
+
+def _point_box() -> list[Column]:
+    # the box of a point (x, y)
+    return [
+        F.col("x").alias("x_min"),
+        F.col("y").alias("y_min"),
+        F.col("x").alias("x_max"),
+        F.col("y").alias("y_max"),
+    ]
 
 
 def rel_geometry(
     members: DataFrame,
     positions: DataFrame,
+    hand_up_box: bool = False,
     max_passes: int = 12,
 ) -> DataFrame:
     """G6 (posr_processing osmconvert.c:6917-7070): resolve each
-    relation's position from its members' positions, iterating
+    relation's position and box from its members', iterating
     because rel->rel members resolve in later passes (<=12, R3).
 
     members: (rel_id long, j int, ref_id long, is_rel boolean,
               is_area boolean) — ref_id indexes `positions` for
     node/way members and other rel_ids for rel members.
-    positions: (ref_id long, x long, y long) for non-rel members.
+    positions: (ref_id long, x long, y long) for non-rel members,
+    plus their boxes (x_min, y_min, x_max, y_max) when hand_up_box.
+
+    hand_up_box picks what a resolved relation hands its parents.
+    False: its center point, and every member's box is its
+    position (plain --all-to-nodes). True: its union box, with
+    node/way members bringing their own boxes (--add-bbox*, the
+    reference's global_calccoords=-1 mode).
 
     Exact reference semantics:
       - a relation resolves in a pass only when every REL member is
         already resolved (unresolved rel member -> retry next pass,
-        osmconvert.c:7019-7024); non-rel members with no position
-        are simply skipped;
-      - bbox over member positions; x_middle = x_max/2 + x_min/2
-        (C trunc), y_middle = (y_max+y_min)/2;
+        osmconvert.c:7019-7024), so members referencing missing
+        relations or cycles never resolve; non-rel members with no
+        position are simply skipped; >= 1 valid member is needed;
+      - its box is the union of member boxes; x_middle =
+        x_max/2 + x_min/2 (C trunc), y_middle = (y_max+y_min)/2;
       - is_area -> center = middle. NOT area -> the LAST member
         position in member order: the reference's nearest-to-middle
         scan never refreshes its probe pointer (posi_xy stays on the
         last member, osmconvert.c:6977-6989), so `new_distance`
         always equals the current distance and no update fires —
         we reproduce the de-facto behavior, not the dead code.
+    Plain min/max box: the reference's 9e8 anti-wraparound guard
+    (osmconvert.c:7036-7060) only diverges on member spreads wider
+    than 90 degrees of longitude.
+
+    Returns (rel_id, x, y, x_min, y_min, x_max, y_max).
+
+    Plan: node/way member values never change across passes, so
+    their box partials and last-valid candidate collapse to one row
+    per relation before the loop — the corpus-sized joins stay out
+    of the fixpoint, which iterates on the rel->rel layer only. One
+    job per pass: the pass's batch is a lazy localCheckpoint that
+    the count ending the loop materializes; `done` stays a lazy
+    union of the <= max_passes checkpointed batches.
     """
-    resolved = positions.select(
-        F.col("ref_id").alias("rel_id"), "x", "y"
-    ).limit(0)
-    pending = members
-    for _ in range(max_passes):
-        rel_pos = resolved.select(
-            F.col("rel_id").alias("ref_id"),
-            F.col("x").alias("rx"),
-            F.col("y").alias("ry"),
-        )
-        m = (
-            pending.join(positions, "ref_id", "left")
-            .join(rel_pos, "ref_id", "left")
-            .withColumn("px", F.coalesce("x", "rx"))
-            .withColumn("py", F.coalesce("y", "ry"))
-        )
-        agg = m.groupBy("rel_id").agg(
-            F.first("is_area").alias("is_area"),
-            F.max(F.col("is_rel") & F.col("px").isNull()).alias(
-                "blocked"
+    if not hand_up_box:
+        positions = positions.select("ref_id", "x", "y", *_point_box())
+
+    def partials(prefix: str) -> list[Column]:
+        # box union and last valid member (by order j) of a group
+        return [
+            F.min("x_min").alias(prefix + "x_min"),
+            F.min("y_min").alias(prefix + "y_min"),
+            F.max("x_max").alias(prefix + "x_max"),
+            F.max("y_max").alias(prefix + "y_max"),
+            F.max_by(F.struct("j", "x", "y"), F.col("j")).alias(
+                prefix + "last"
             ),
-            F.count(F.col("px")).alias("n"),
-            F.min("px").alias("x_min"),
-            F.max("px").alias("x_max"),
-            F.min("py").alias("y_min"),
-            F.max("py").alias("y_max"),
-            # last member (by order j) with a valid position
-            F.max_by(
-                F.struct("px", "py"), F.when(F.col("px").isNotNull(), F.col("j"))
-            ).alias("last"),
+            F.count("*").alias(prefix + "n"),
+        ]
+
+    stat = (
+        members.filter(~F.col("is_rel"))
+        .join(positions, "ref_id")
+        .groupBy("rel_id")
+        .agg(*partials("s"))
+    )
+    spine = (
+        members.groupBy("rel_id")
+        .agg(
+            F.first("is_area").alias("is_area"),
+            F.count_if("is_rel").alias("n_rel"),
         )
-        ready = agg.filter(~F.col("blocked") & (F.col("n") > 0))
-        # 2 jobs/pass (round-2; was ~5): lazy checkpoints are
-        # materialized by the counts that also drive the loop exits.
-        new_pos = ready.select(
+        .join(stat, "rel_id", "left")
+        .localCheckpoint(eager=False)
+    )
+    mem_rel = (
+        members.filter(F.col("is_rel"))
+        .select("rel_id", "j", F.col("ref_id").alias("child"))
+        .localCheckpoint(eager=False)
+    )
+    done = spine.select(
+        "rel_id",
+        *[F.lit(0).cast("long").alias(c) for c in ("x", "y", *_BOX)],
+    ).limit(0)
+    for _ in range(max_passes):
+        handed = done.select(
+            F.col("rel_id").alias("child"),
+            "x",
+            "y",
+            *(_BOX if hand_up_box else _point_box()),
+        )
+        ragg = (
+            mem_rel.join(handed, "child")
+            .groupBy("rel_id")
+            .agg(*partials("r"))
+        )
+        rn = F.coalesce("rn", F.lit(0))
+        cand = (
+            spine.join(done.select("rel_id"), "rel_id", "left_anti")
+            .join(ragg, "rel_id", "left")
+            .filter(
+                (rn == F.col("n_rel"))
+                & (F.coalesce("sn", F.lit(0)) + rn > 0)
+            )
+        )
+        # least/greatest skip nulls: a side without members drops out
+        batch = cand.select(
             "rel_id",
-            F.when(
-                F.col("is_area"),
-                F.expr("x_max div 2 + x_min div 2"),
-            )
-            .otherwise(F.col("last.px"))
+            "is_area",
+            F.least("sx_min", "rx_min").alias("x_min"),
+            F.least("sy_min", "ry_min").alias("y_min"),
+            F.greatest("sx_max", "rx_max").alias("x_max"),
+            F.greatest("sy_max", "ry_max").alias("y_max"),
+            F.greatest("slast", "rlast").alias("last"),
+        ).select(
+            "rel_id",
+            F.when(F.col("is_area"), F.expr("x_max div 2 + x_min div 2"))
+            .otherwise(F.col("last.x"))
             .alias("x"),
-            F.when(
-                F.col("is_area"), F.expr("(y_max + y_min) div 2")
-            )
-            .otherwise(F.col("last.py"))
+            F.when(F.col("is_area"), F.expr("(y_max + y_min) div 2"))
+            .otherwise(F.col("last.y"))
             .alias("y"),
+            *_BOX,
         ).localCheckpoint(eager=False)
-        if new_pos.count() == 0:
+        if batch.count() == 0:
             break
-        resolved = resolved.unionByName(new_pos).localCheckpoint(
-            eager=False
-        )
-        pending = pending.join(
-            new_pos.select("rel_id"), "rel_id", "left_anti"
-        ).localCheckpoint(eager=False)
-        if pending.count() == 0:
-            break
-    return resolved
+        done = done.unionByName(batch)
+    return done
 
 
 # ---------------------------------------------------------------

@@ -1293,12 +1293,13 @@ def trace_frechet_pairs(
     (n x n) grid DAG (moves right/down/diagonal), solved by
     UNROLLED relaxation exactly like hop_distance's Bellman-Ford —
     max(li+lj) passes guarantee convergence (the longest monotone
-    path has 2n-2 edges). Two relaxation steps are FUSED per
-    shuffle round: s1 = relax(f), s2 = relax(s1), then one
-    groupBy-min over f ∪ s1 ∪ s2 — the second step rides on s1's
-    un-deduplicated rows (≤3× inflation, still grid-bounded after
-    the equi-join), halving both the shuffle-agg count and the
-    driver job count vs one-step rounds. Lazy localCheckpoint per
+    path has 2n-2 edges). Up to FOUR relaxation steps are FUSED
+    per shuffle round: s1 = relax(f), s2 = relax(s1), ..., then one
+    groupBy-min over f ∪ s1 ∪ s2 ∪ ... — each later step rides on
+    the previous one's un-deduplicated rows (≤3× inflation per
+    step, still grid-bounded after the equi-join), cutting both
+    the shuffle-agg count and the driver job count up to 4x vs
+    one-step rounds. Lazy localCheckpoint per
     round keeps lineage flat. All arithmetic is int64 min/max on
     exact squared distances — no floats anywhere, so the oracle
     (an enumerate-all-monotone-paths recursive CTE) matches

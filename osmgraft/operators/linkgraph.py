@@ -242,11 +242,11 @@ def lpa_communities(edges: DataFrame, iters: int = 4) -> DataFrame:
     nondeterministic by design, useless for an oracle-checked
     engine).
 
-    Complements the two connected-component resolvers (dedup.py
-    min-label propagation, cluster_star star-contraction): those
-    find maximal reachable sets; LPA splits a connected graph into
-    DENSE blocks — the community structure a crawl scheduler or
-    near-dup family viewer actually wants.
+    Complements the connected-component resolver (dedup.py
+    cluster_star star-contraction): that finds maximal reachable
+    sets; LPA splits a connected graph into DENSE blocks — the
+    community structure a crawl scheduler or near-dup family
+    viewer actually wants.
 
     Scale: per round, one shuffle of the edge list keyed on dst to
     look up neighbor labels (ranks-style small side — one row per

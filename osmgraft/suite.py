@@ -629,9 +629,9 @@ def q142_density_clusters(spark, sf_dir):
     """DBSCAN-style grid density clustering of the geocoded
     corpus (operators/density.grid_density_clusters): cells of
     side 2^22, core = 3x3 neighborhood holding >= 1/10 of the
-    placed corpus (scale-invariant minPts), components by the
-    engine's 12-pass bounded min-label idiom, border cells
-    attached, noise = null. Finds the megacity hotspot cluster;
+    placed corpus (scale-invariant minPts), connected components
+    of core cells by star contraction, border cells attached,
+    noise = null. Finds the megacity hotspot cluster;
     one corpus shuffle, everything else on the per-cell table."""
     from .operators.density import grid_density_clusters
 
@@ -701,12 +701,11 @@ e0 AS (
    AND b.u BETWEEN a.u - 1 AND a.u + 1
    AND a.cell <> b.cell
 ),
-reach(u, w, pass) AS (
-  SELECT cell, cell, 0 FROM core
+reach(u, w) AS (
+  SELECT cell, cell FROM core
   UNION
-  SELECT r.u, e.ub, r.pass + 1
+  SELECT r.u, e.ub
   FROM reach r JOIN e0 e ON e.ua = r.w
-  WHERE r.pass < 12
 ),
 labels AS (
   SELECT u AS cell, MIN(w) AS lbl FROM reach GROUP BY u
@@ -4317,7 +4316,7 @@ def q190_conflate_places(spark, sf_dir):
     """POI conflation (operators/conflate.conflate_places): place
     records sharing a name key within 0.5 fixed-degrees merge into
     one canonical entity — (name_key, cell) blocked pairs, exact
-    distance gate, min-label components. Places = doc points named
+    distance gate, star-contraction components. Places = doc points named
     by their first text token."""
     from .operators.conflate import conflate_places
 

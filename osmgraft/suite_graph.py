@@ -220,7 +220,8 @@ def q39_rel_geometry(spark, sf_dir):
 
 def q51_rel_centers_fixpoint(spark, sf_dir):
     """G5/R3 composed (round 3): the CLI --all-to-nodes relation
-    center FIXED POINT (cli._rel_centers) over multi-level rel->rel
+    center FIXED POINT (cli._rel_members into operators/graph.
+    rel_geometry, center mode) over multi-level rel->rel
     member chains — a relation resolves only after its child
     relation has (posr_processing, osmconvert.c:6917-7070), so the
     synth child chains (length <= 7 between breaks) take several
@@ -229,8 +230,10 @@ def q51_rel_centers_fixpoint(spark, sf_dir):
     valid member's position (child center when present), area
     relations the C-trunc bbox middle of all member positions.
     Oracle: recursive CTE walking the child chains upward."""
-    from .cli import OFF10, OFF20, _rel_centers
-    from .operators.graph import synth_rels, synth_ways, way_geometry
+    from .cli import OFF10, _rel_members
+    from .operators.graph import (
+        rel_geometry, synth_rels, synth_ways, way_geometry,
+    )
 
     docs, n = _docs_and_n(spark, sf_dir)
     nodes = _nodes(spark, sf_dir)
@@ -266,19 +269,19 @@ def q51_rel_centers_fixpoint(spark, sf_dir):
         .otherwise(F.create_map(F.lit("route"), F.lit("x")))
         .alias("tags"),
     )
-    node_pos = nodes.select(
-        F.col("doc_id").alias("id"), "lon_i", "lat_i"
-    )
-    way_pos = centers.select(
-        (F.col("way_id") + F.lit(OFF10)).alias("id"),
-        F.col("center_lon").alias("lon_i"),
-        F.col("center_lat").alias("lat_i"),
-    )
-    out = _rel_centers(rels, node_pos, way_pos)
-    return out.select(
-        (F.col("id") - F.lit(OFF20)).alias("rel_id"),
+    positions = nodes.select(
+        F.col("doc_id").alias("ref_id"),
         F.col("lon_i").alias("x"),
         F.col("lat_i").alias("y"),
+    ).unionByName(
+        centers.select(
+            (F.col("way_id") + F.lit(OFF10)).alias("ref_id"),
+            F.col("center_lon").alias("x"),
+            F.col("center_lat").alias("y"),
+        )
+    )
+    return rel_geometry(_rel_members(rels), positions).select(
+        "rel_id", "x", "y"
     )
 
 
@@ -740,16 +743,16 @@ def q156_trace_clusters(spark, sf_dir):
     """Trajectory clustering: traces whose discrete Frechet
     distance is within one cell side (q154's `within`) form an
     undirected similarity graph; connected components resolve by
-    the engine's min-label propagation (operators/dedup.
-    dedup_clusters — the same resolver the text dedup pipeline
-    uses, composed over a geospatial pair generator). Output
+    star contraction (operators/dedup.cluster_star — the same
+    resolver the text dedup pipeline uses, composed over a
+    geospatial pair generator). Output
     (trace_id, cluster) with cluster = min trace id. shift=24
     (vs q154's 22) so the within threshold admits real multi-
     member clusters on the synthetic spread.
     Density-guarded (max_cell_traces=512; inert below the
     sf0.1 shift-24 occupancy of 246, bites at the 10x input's
     2461)."""
-    from .operators.dedup import dedup_clusters
+    from .operators.dedup import cluster_star
     from .operators.linecover import trace_frechet_pairs
 
     pairs = trace_frechet_pairs(
@@ -758,7 +761,7 @@ def q156_trace_clusters(spark, sf_dir):
         n_steps=5,
         max_cell_traces=512,
     ).where(F.col("within"))
-    return dedup_clusters(
+    return cluster_star(
         pairs, a_col="trace_a", b_col="trace_b"
     ).select(F.col("doc_id").alias("trace_id"), "cluster")
 

@@ -598,32 +598,12 @@ def q44_dedup_clusters(spark, sf_dir):
     """Dedup resolution: LSH candidate pairs -> connected components
     -> keeper (min doc id) per cluster. Corpus plants TWO dup
     generations ('dup ' and 'dup dup ' prefixes) so clusters chain
-    across pairs that LSH alone only connects transitively."""
-    from .operators.dedup import dedup_clusters
-
-    base = _corpus(spark, sf_dir)  # originals + gen-1 dups
-    gen2 = base.filter(F.col("doc_id") >= 1000000).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.lit("dup "), F.col("text")).alias("text"),
-    )
-    corpus = base.unionByName(gen2)
-    pairs = minhash_lsh_pairs(
-        corpus, n_hashes=N_HASHES, band_rows=BAND_ROWS
-    )
-    return dedup_clusters(pairs)
-
-
-def q166_cluster_star(spark, sf_dir):
-    """q44's exact dup-cluster resolution re-derived by ALTERNATING
-    STAR contraction (operators/dedup.cluster_star — O(log^2 n)
-    rounds regardless of component diameter, vs min-label
-    propagation's diameter-bounded passes). Same planted corpus,
-    same LSH pairs, same oracle (the transitive-closure CTE): three
-    independent algorithms — propagation, star contraction, and the
-    recursive closure — must agree on every (doc_id, cluster)."""
+    across pairs that LSH alone only connects transitively.
+    Components by star contraction (operators/dedup.cluster_star);
+    the oracle is the recursive transitive closure."""
     from .operators.dedup import cluster_star
 
-    base = _corpus(spark, sf_dir)
+    base = _corpus(spark, sf_dir)  # originals + gen-1 dups
     gen2 = base.filter(F.col("doc_id") >= 1000000).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.lit("dup "), F.col("text")).alias("text"),
@@ -666,7 +646,7 @@ def q57_semantic_dedup(spark, sf_dir):
     so ANN recall on the planted dups is exact by construction."""
     from .suite import load
 
-    from .operators.dedup import dedup_clusters, embed_ann_banded
+    from .operators.dedup import cluster_star, embed_ann_banded
 
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -690,7 +670,7 @@ def q57_semantic_dedup(spark, sf_dir):
         dim=DIM,
         target_bucket=ANN_TARGET_BUCKET,
     ).filter(F.col("cos_r") >= 0.95)
-    clusters = dedup_clusters(pairs, a_col="a", b_col="b")
+    clusters = cluster_star(pairs, a_col="a", b_col="b")
     return (
         corpus.select(F.col("vec_id").alias("doc_id"))
         .join(clusters, "doc_id", "left")
@@ -929,7 +909,6 @@ ML_QUERIES = {
     "q120_reciprocal_nn": q120_reciprocal_nn,
     "q32_embed_ann_lsh": q32_embed_ann_lsh,
     "q44_dedup_clusters": q44_dedup_clusters,
-    "q166_cluster_star": q166_cluster_star,
     "q55_dedup_keep_list": q55_dedup_keep_list,
     "q57_semantic_dedup": q57_semantic_dedup,
     "q45_embed_ann_banded": q45_embed_ann_banded,
@@ -958,7 +937,6 @@ GROUP BY 1
         "q120_reciprocal_nn": _RNN_ORACLE,
         "q32_embed_ann_lsh": _ann_lsh_oracle(),
         "q44_dedup_clusters": _cluster_oracle(),
-        "q166_cluster_star": _cluster_oracle(),
         "q55_dedup_keep_list": _keep_oracle(),
         "q57_semantic_dedup": _semantic_keep_oracle(),
         "q45_embed_ann_banded": _ann_banded_oracle(),

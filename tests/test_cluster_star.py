@@ -1,13 +1,13 @@
-"""cluster_star: agreement with a direct union-find on random
-graphs, agreement with dedup_clusters on shallow graphs, and the
-long-chain case (diameter >> 12) that min-label propagation's pass
-cap splits but star contraction must resolve whole."""
+"""cluster_star: agreement with a direct union-find on random and
+shallow (dup-group) graphs, and the long-chain case (diameter >> 12)
+that a pass-capped min-label propagation would split but star
+contraction must resolve whole."""
 
 from __future__ import annotations
 
 import numpy as np
 
-from osmgraft.operators.dedup import cluster_star, dedup_clusters
+from osmgraft.operators.dedup import cluster_star
 
 
 def _union_find(pairs):
@@ -50,14 +50,11 @@ def test_star_matches_propagation_on_shallow(spark):
     # dup-group shape: many tiny stars
     pairs = [(int(g) * 100, int(g) * 100 + int(i) + 1)
              for g in range(20) for i in rng.integers(0, 9, 4)]
-    df = _pairs_df(spark, pairs)
     star = {
-        r.doc_id: r.cluster for r in cluster_star(df).collect()
+        r.doc_id: r.cluster
+        for r in cluster_star(_pairs_df(spark, pairs)).collect()
     }
-    prop = {
-        r.doc_id: r.cluster for r in dedup_clusters(df).collect()
-    }
-    assert star == prop
+    assert star == _union_find(pairs)
 
 
 def test_star_resolves_long_chain(spark):

@@ -118,32 +118,32 @@ def test_jaccard_on_candidates_composes_with_lsh(corpus):
 
 
 def test_dedup_clusters_warns_when_unconverged(spark, caplog):
-    """a chain with diameter > max_passes triggers the truncation
-    warning (mirrors osmconvert's recursion-cap warning) instead of
-    silently splitting the component."""
+    """cluster_star stopped by max_rounds before its star fixed
+    point logs the truncation warning (mirrors osmconvert's
+    recursion-cap warning) instead of silently splitting the
+    component; a converged run stays silent."""
     import logging
 
-    from osmgraft.operators.dedup import dedup_clusters
+    from osmgraft.operators.dedup import cluster_star
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], "a long, b long"
     )
     with caplog.at_level(logging.WARNING, logger="osmgraft"):
-        out = dedup_clusters(chain, max_passes=3)
+        out = cluster_star(chain, max_rounds=1)
         n = out.count()
     assert n == 21
     assert any(
-        "dedup_clusters stopped" in r.message for r in caplog.records
+        "cluster_star stopped" in r.message for r in caplog.records
     )
 
-    # and a converged run stays silent
     caplog.clear()
     with caplog.at_level(logging.WARNING, logger="osmgraft"):
-        out2 = dedup_clusters(chain, max_passes=25)
+        out2 = cluster_star(chain)
         labels = {r.doc_id: r.cluster for r in out2.collect()}
-    assert set(labels.values()) == {0}
+    assert labels == {i: 0 for i in range(21)}
     assert not any(
-        "dedup_clusters stopped" in r.message for r in caplog.records
+        "cluster_star stopped" in r.message for r in caplog.records
     )
 
 

@@ -128,7 +128,7 @@ def test_frechet_variable_length(spark):
 
 
 def test_frechet_clusters(spark):
-    from osmgraft.operators.dedup import dedup_clusters
+    from osmgraft.operators.dedup import cluster_star
 
     # 1 and 2 identical, 3 a twin of 2, 4 far away: {1,2,3} cluster
     pts = [(0, i * 100_000) for i in range(5)]
@@ -136,7 +136,7 @@ def test_frechet_clusters(spark):
     far = [(50_000_000, 50_000_000 + i * 100_000) for i in range(5)]
     df = _traces_df(spark, {1: pts, 2: pts, 3: near, 4: far})
     pairs = trace_frechet_pairs(df, shift=22).where("within")
-    out = dedup_clusters(
+    out = cluster_star(
         pairs, a_col="trace_a", b_col="trace_b"
     ).collect()
     got = {(r.doc_id, r.cluster) for r in out}

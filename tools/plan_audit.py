@@ -205,7 +205,6 @@ ITERATIVE_TRUNCATED = {
     "q55_dedup_keep_list",
     "q57_semantic_dedup",
     "q88_incremental_dedup",
-    "q166_cluster_star",
     "q156_trace_clusters",
     "q190_conflate_places",
     "q39_rel_geometry",
@@ -219,9 +218,9 @@ ITERATIVE_TRUNCATED = {
     "q77_bpe_segment",
     "q148_bpe_pairs",
     "q179_bpe_optimal",
-    # q142's grid-density components run the 12-pass min-label
-    # idiom with a 1-row total broadcast per round: the expanded
-    # printout re-prints that scalar funnel per pass per subtree
+    # q142's grid-density components run star-contraction rounds
+    # over cells built with a 1-row total broadcast: the expanded
+    # printout re-prints that scalar funnel per round per subtree
     # reference (1020 SinglePartition STRINGS for ~1 executed)
     "q142_density_clusters",
     # q116's driver-planned Hilbert cover InSet: the expanded
