@@ -421,11 +421,14 @@ def _inside_nodes(nodes: DataFrame, opts: dict) -> DataFrame:
     return nodes
 
 
-def _apply_spatial(nodes, ways, rels, opts):
+def _apply_spatial(nodes, ways, rels, opts, cached: list[DataFrame]):
     """Border / ref-graph stage. Returns the kept (nodes, ways,
     rels). --drop-broken-refs alone activates the keep-hash exactly
     like the reference (hashactive = border_active ||
-    global_dropbrokenrefs, osmconvert.c:10427)."""
+    global_dropbrokenrefs, osmconvert.c:10427). The inside nodes are
+    persisted (and put on `cached` for the caller to release), so
+    the border test runs once per node although every keep stage
+    reads them."""
     spatial = opts["bbox"] is not None or opts["poly"] is not None
     hash_active = spatial or opts["drop_broken_refs"]
     if not hash_active:
@@ -447,7 +450,10 @@ def _apply_spatial(nodes, ways, rels, opts):
             rel_edges, direct.select(F.col("id").alias("rel_id"))
         ).select(F.col("rel_id").alias("id"))
 
-    inside = _inside_nodes(nodes, opts) if spatial else nodes
+    inside = nodes
+    if spatial:
+        inside = _inside_nodes(nodes, opts).persist()
+        cached.append(inside)
 
     wref = ways.select("id", F.explode("refs").alias("ref"))
     kept_node_ids = inside.select(F.col("id").alias("ref"))
@@ -1295,13 +1301,43 @@ def _emit_csv(nodes, ways, rels, opts) -> None:
 
 def convert(spark: SparkSession, argv: list[str]) -> str | None:
     """Run one conversion; returns the output path (None for the
-    stdout sinks: csv / statistics / key lists)."""
+    stdout sinks: csv / statistics / key lists).
+
+    Each Python stage runs once per object: every input's decoded
+    frame and the border's inside nodes are persisted while the
+    conversion runs. Whether it returns or raises, convert then
+    releases them and every other RDD persisted while it ran (the
+    relation loops' localCheckpoints), so it leaves no persisted
+    data behind; it assumes no other thread persists RDDs on the
+    same SparkContext meanwhile."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    cached: list[DataFrame] = []
+    try:
+        return _convert(spark, _parse_args(argv), cached)
+    finally:
+        for df in cached:
+            df.unpersist()
+        for rdd_id, rdd in jsc.getPersistentRDDs().items():
+            if rdd_id not in before:
+                rdd.unpersist(False)
+
+
+def _convert(
+    spark: SparkSession, opts: dict, cached: list[DataFrame]
+) -> str | None:
+    """convert's body; every frame it persists goes on `cached`."""
     from .filterlang.ast import parse as parse_keep
     from .filterlang.spark import keep_column, tags_filter_column
     from .operators.merge import union_dedup
-    from .sources.auto import read_osm_auto
+    from .sources.auto import decode_osm_auto
+    from .sources.osmxml import split_decoded
 
-    opts = _parse_args(argv)
+    def decoded(path: str, **kw) -> tuple[DataFrame, ...]:
+        # decode once: the filter stages below read the cache
+        df = decode_osm_auto(spark, path, with_meta=True, **kw).persist()
+        cached.append(df)
+        return split_decoded(df)
 
     if opts["out_timestamp"]:
         # K8 probe (osmconvert.c:10501-10508): print the first
@@ -1327,10 +1363,7 @@ def convert(spark: SparkSession, argv: list[str]) -> str | None:
         return None
 
     parts = [
-        read_osm_auto(
-            spark, p, with_meta=True,
-            pbf_granularity=opts["pbf_granularity"],
-        )
+        decoded(p, pbf_granularity=opts["pbf_granularity"])
         for p in opts["inputs"]
     ]
 
@@ -1383,10 +1416,7 @@ def convert(spark: SparkSession, argv: list[str]) -> str | None:
         # --subtract (osmconvert.c:554-556, 12731-12735)
         from .operators.merge import subtract as _subtract
 
-        sub = [
-            read_osm_auto(spark, p, with_meta=True)
-            for p in opts["sub_inputs"]
-        ]
+        sub = [decoded(p) for p in opts["sub_inputs"]]
         nodes = _subtract(
             nodes, union_dedup([p[0] for p in sub], ["id"]), ["id"]
         )
@@ -1649,7 +1679,7 @@ def convert(spark: SparkSession, argv: list[str]) -> str | None:
         if opts["out_none"] and opts["out"] is None:
             return None
 
-    nodes, ways, rels = _apply_spatial(nodes, ways, rels, opts)
+    nodes, ways, rels = _apply_spatial(nodes, ways, rels, opts, cached)
 
     if opts["all_to_nodes"]:
         if opts["add_bbox"]:

@@ -316,7 +316,9 @@ def rel_geometry(
     (osmconvert.c:7036-7060) only diverges on member spreads wider
     than 90 degrees of longitude.
 
-    Returns (rel_id, x, y, x_min, y_min, x_max, y_max).
+    Returns (rel_id, x, y, x_min, y_min, x_max, y_max). When the
+    last allowed pass still resolved relations, a warning on the
+    `osmgraft` logger gives the number left unresolved.
 
     Plan: node/way member values never change across passes, so
     their box partials and last-valid candidate collapse to one row
@@ -409,6 +411,18 @@ def rel_geometry(
         if batch.count() == 0:
             break
         done = done.unionByName(batch)
+    else:
+        # the cap bound with relations still resolving: say so, as
+        # the keep closure does, with what is left without a position
+        unresolved = spine.join(done, "rel_id", "left_anti").count()
+        if unresolved:
+            _LOG.warning(
+                "relation geometry stopped at %d passes with %d "
+                "relations unresolved; relations nested deeper get "
+                "no position",
+                max_passes,
+                unresolved,
+            )
     return done
 
 

@@ -23,9 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .o5m import read_o5m
-from .osmxml import read_osm_xml
-from .pbf import _expand, read_pbf
+from .o5m import decode_o5m
+from .osmxml import decode_osm_xml, split_decoded
+from .pbf import _expand, decode_pbf
 
 
 def sniff_format(path: str) -> str:
@@ -56,17 +56,17 @@ def sniff_format(path: str) -> str:
     raise ValueError(f"unknown file format: {path}")
 
 
-def read_osm_auto(
+def decode_osm_auto(
     spark: SparkSession,
     path: str,
     with_meta: bool = False,
     pbf_granularity: int | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> DataFrame:
     """path: file/dir/glob of OSM files in any supported format
     (all expanded files must share one format, like the reference's
-    per-file dispatch). Returns (nodes, ways, rels); with_meta=True
-    adds the author columns (version, timestamp, changeset, uid,
-    user) on every kind."""
+    per-file dispatch) -> that format's decoded frame
+    (sources.osmxml.DECODED_SCHEMA); with_meta=True adds the author
+    columns (version, timestamp, changeset, uid, user)."""
     files = _expand(path)
     if not files:
         raise FileNotFoundError(path)
@@ -78,10 +78,23 @@ def read_osm_auto(
                 f"mixed formats under {path}: {fmt} vs {other} ({f})"
             )
     if fmt == "pbf":
-        return read_pbf(
+        return decode_pbf(
             spark, path, with_meta=with_meta,
             force_granularity=pbf_granularity,
         )
     if fmt == "o5m":
-        return read_o5m(spark, path, with_meta=with_meta)
-    return read_osm_xml(spark, path, with_meta=with_meta)
+        return decode_o5m(spark, path, with_meta=with_meta)
+    return decode_osm_xml(spark, path, with_meta=with_meta)
+
+
+def read_osm_auto(
+    spark: SparkSession,
+    path: str,
+    with_meta: bool = False,
+    pbf_granularity: int | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(nodes, ways, rels) of decode_osm_auto's frame, each a
+    column-pruned filter of it."""
+    return split_decoded(
+        decode_osm_auto(spark, path, with_meta, pbf_granularity)
+    )

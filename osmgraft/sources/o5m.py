@@ -25,7 +25,8 @@ str_read 8103-8177):
 Distribution model mirrors sources/osmxml.py: one task per file
 (spark.read.format('binaryFile') + mapInPandas), which is how
 multi-extract ingestion parallelizes; planet-scale conversion is a
-one-off offline step.
+one-off offline step. Each file is parsed once into one decoded
+frame that nodes, ways and relations all filter.
 """
 
 from __future__ import annotations
@@ -35,7 +36,12 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .osmxml import NODES_SCHEMA, RELS_SCHEMA, WAYS_SCHEMA
+from .osmxml import (
+    DECODED_META_SCHEMA,
+    DECODED_SCHEMA,
+    decoded_frames,
+    split_decoded,
+)
 
 _TAB_M = 15000 + 4000
 _TAB_STR_M = 250
@@ -277,38 +283,34 @@ def parse_o5m(data: bytes, with_meta: bool = False):
     return nodes, ways, rels
 
 
-def _reader(kind: int, with_meta: bool = False):
+def _reader(with_meta: bool = False):
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             for data in b["content"]:
-                rows = parse_o5m(bytes(data), with_meta)[kind]
-                if rows:
-                    yield pd.DataFrame(rows)
+                parsed = parse_o5m(bytes(data), with_meta)
+                yield from decoded_frames(parsed, with_meta)
 
     return gen
+
+
+def decode_o5m(
+    spark: SparkSession, path: str, with_meta: bool = False
+) -> DataFrame:
+    """path: file/dir/glob of .o5m files -> the decoded frame
+    (sources.osmxml.DECODED_SCHEMA, plus the author columns with
+    with_meta). One task per file, each file parsed once."""
+    raw = spark.read.format("binaryFile").load(path).select("content")
+    schema = DECODED_META_SCHEMA if with_meta else DECODED_SCHEMA
+    return raw.mapInPandas(_reader(with_meta), schema)
 
 
 def read_o5m(
     spark: SparkSession, path: str, with_meta: bool = False
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """path: file/dir/glob of .o5m files; one task per file.
-    with_meta=True adds the author columns."""
-    from .osmxml import (
-        NODES_META_SCHEMA,
-        RELS_META_SCHEMA,
-        WAYS_META_SCHEMA,
-    )
-
-    raw = spark.read.format("binaryFile").load(path).select("content")
-    ns, ws, rs = (
-        (NODES_META_SCHEMA, WAYS_META_SCHEMA, RELS_META_SCHEMA)
-        if with_meta
-        else (NODES_SCHEMA, WAYS_SCHEMA, RELS_SCHEMA)
-    )
-    nodes = raw.mapInPandas(_reader(0, with_meta), ns)
-    ways = raw.mapInPandas(_reader(1, with_meta), ws)
-    rels = raw.mapInPandas(_reader(2, with_meta), rs)
-    return nodes, ways, rels
+    """path: file/dir/glob of .o5m files; one task per file parses
+    it once, and (nodes, ways, rels) are filters of that one decoded
+    frame. with_meta=True adds the author columns."""
+    return split_decoded(decode_o5m(spark, path, with_meta))
 
 
 def _find_dataset(data: bytes, code: int) -> _Buf | None:

@@ -14,6 +14,9 @@ Output schemas (SURVEY.md §1.1):
   ways(id long, refs array<long>, tags map<string,string>)
   rels(id long, members array<struct<ref long, mtype string,
        role string>>, tags map<string,string>)
+All three are filters of one decoded frame (DECODED_SCHEMA: a
+`kind` column over the union of their columns), so each file is
+parsed once for all three kinds.
 Coordinates become 1e-7 fixed-point exactly as the reference's XML
 parser does (oo__strtodeg osmconvert.c:9264+: exact digit
 accumulation, digits beyond the 7th ignored — i.e. truncation
@@ -25,16 +28,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-
-NODES_SCHEMA = (
-    "id long, lat_i long, lon_i long, tags map<string,string>"
-)
-WAYS_SCHEMA = "id long, refs array<long>, tags map<string,string>"
-RELS_SCHEMA = (
-    "id long, members array<struct<ref:long,mtype:string,"
-    "role:string>>, tags map<string,string>"
-)
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # optional author metadata columns (SURVEY §1.1: version,
 # timestamp epoch-seconds, changeset, uid, user; 0/None = absent,
@@ -43,9 +37,55 @@ META_COLS = (
     "version int, timestamp long, changeset long, uid long, "
     "user string"
 )
-NODES_META_SCHEMA = NODES_SCHEMA + ", " + META_COLS
-WAYS_META_SCHEMA = WAYS_SCHEMA + ", " + META_COLS
-RELS_META_SCHEMA = RELS_SCHEMA + ", " + META_COLS
+
+# The decoded frame: every reader parses each split or file ONCE into
+# rows of all three kinds, tagged by `kind` over the union of the
+# per-kind columns; `split_decoded` turns it into (nodes, ways, rels).
+DECODED_SCHEMA = (
+    "kind string, id long, lat_i long, lon_i long, refs array<long>, "
+    "members array<struct<ref:long,mtype:string,role:string>>, "
+    "tags map<string,string>"
+)
+DECODED_META_SCHEMA = DECODED_SCHEMA + ", " + META_COLS
+
+_KINDS = ("node", "way", "relation")
+_KIND_COLS = (
+    ("id", "lat_i", "lon_i", "tags"),
+    ("id", "refs", "tags"),
+    ("id", "members", "tags"),
+)
+_META_NAMES = ("version", "timestamp", "changeset", "uid", "user")
+_DECODED_COLS = (
+    "kind", "id", "lat_i", "lon_i", "refs", "members", "tags"
+)
+
+
+def decoded_frames(parsed, with_meta: bool) -> Iterator[pd.DataFrame]:
+    """One parse's (nodes, ways, rels) row lists -> pandas frames
+    in the decoded schema, one per non-empty kind. Columns a kind
+    lacks are None (object dtype, which Arrow takes for any type)."""
+    cols = _DECODED_COLS + (_META_NAMES if with_meta else ())
+    for kind, rows in zip(_KINDS, parsed):
+        if not rows:
+            continue
+        pdf = pd.DataFrame(rows)
+        pdf["kind"] = kind
+        for c in cols:
+            if c not in pdf:
+                pdf[c] = None
+        yield pdf[list(cols)]
+
+
+def split_decoded(
+    decoded: DataFrame,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(nodes, ways, rels) as column-pruned filters of one decoded
+    frame; the author columns come along when it carries them."""
+    meta = _META_NAMES if "version" in decoded.columns else ()
+    return tuple(
+        decoded.filter(F.col("kind") == kind).select(*cols, *meta)
+        for kind, cols in zip(_KINDS, _KIND_COLS)
+    )
 
 
 def _fix(s: str) -> int:
@@ -139,34 +179,37 @@ def _parse(xml_text: str, with_meta: bool = False):
     return nodes, ways, rels
 
 
-def _reader(kind: int, with_meta: bool = False):
+def _reader(with_meta: bool = False):
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             for text in b["value"]:
-                rows = _parse(text, with_meta)[kind]
-                if rows:
-                    yield pd.DataFrame(rows)
+                parsed = _parse(text, with_meta)
+                yield from decoded_frames(parsed, with_meta)
 
     return gen
+
+
+def decode_osm_xml(
+    spark: SparkSession, path: str, with_meta: bool = False
+) -> DataFrame:
+    """path: file, directory, or glob of .osm files -> the decoded
+    frame (DECODED_SCHEMA, plus the author columns with with_meta).
+    One task per file, and each file is parsed once for all three
+    kinds."""
+    raw = spark.read.text(path, wholetext=True)
+    schema = DECODED_META_SCHEMA if with_meta else DECODED_SCHEMA
+    return raw.mapInPandas(_reader(with_meta), schema)
 
 
 def read_osm_xml(
     spark: SparkSession, path: str, with_meta: bool = False
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """path: file, directory, or glob of .osm files. Returns
-    (nodes, ways, rels) DataFrames; parallelism = one task per
-    file. with_meta=True adds the author columns (version,
-    timestamp, changeset, uid, user)."""
-    raw = spark.read.text(path, wholetext=True)
-    ns, ws, rs = (
-        (NODES_META_SCHEMA, WAYS_META_SCHEMA, RELS_META_SCHEMA)
-        if with_meta
-        else (NODES_SCHEMA, WAYS_SCHEMA, RELS_SCHEMA)
-    )
-    nodes = raw.mapInPandas(_reader(0, with_meta), ns)
-    ways = raw.mapInPandas(_reader(1, with_meta), ws)
-    rels = raw.mapInPandas(_reader(2, with_meta), rs)
-    return nodes, ways, rels
+    (nodes, ways, rels) DataFrames, filters of one decoded frame:
+    one task per file parses it once, shared by all three kinds.
+    with_meta=True adds the author columns (version, timestamp,
+    changeset, uid, user)."""
+    return split_decoded(decode_osm_xml(spark, path, with_meta))
 
 
 # ----------------------------------------------------------------

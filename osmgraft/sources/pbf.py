@@ -34,9 +34,16 @@ single planet-scale .pbf decodes across the cluster:
      O(#blobs) tiny reads, negligible vs decode;
   2. pack consecutive blobs into byte-range splits of
      ~target_split_bytes;
-  3. one DataFrame of (path, start, end) splits, repartitioned to
-     one split per task, mapInPandas opens the file, reads its
-     range, and decodes — the same parse_pbf kernel, now N-way.
+  3. a range with one row per split and one partition per row
+     (one split per task, no shuffle); mapInPandas looks its split
+     up, opens the file, reads its range, and decodes — the same
+     parse_pbf kernel, now N-way.
+
+Each split is parsed ONCE, into one decoded frame whose `kind`
+column tells nodes, ways and relations apart; the three per-kind
+frames are column-pruned filters of it (sources.osmxml.
+split_decoded). A caller that persists the decoded frame, as
+cli.convert does, pays the Python parse once per convert.
 
 The reference streams a planet file single-threaded; this is the
 Spark-native replacement, not a translation.
@@ -51,9 +58,14 @@ import zlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from .osmxml import NODES_SCHEMA, RELS_SCHEMA, WAYS_SCHEMA
+from .osmxml import (
+    DECODED_META_SCHEMA,
+    DECODED_SCHEMA,
+    decoded_frames,
+    split_decoded,
+)
 
 
 def _varint(b: bytes, i: int) -> tuple[int, int]:
@@ -459,26 +471,55 @@ def _expand(path: str) -> list[str]:
 
 
 def _range_reader(
-    kind: int,
+    splits: list[tuple[str, int, int]],
     with_meta: bool = False,
     force_granularity: int | None = None,
 ):
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            for path, start, end in zip(
-                b["path"], b["start"], b["end"]
-            ):
+            for i in b["id"]:
+                path, start, end = splits[i]
                 with open(path, "rb") as f:
-                    f.seek(int(start))
-                    data = f.read(int(end) - int(start))
-                rows = parse_pbf(
+                    f.seek(start)
+                    data = f.read(end - start)
+                parsed = parse_pbf(
                     data, with_meta,
                     force_granularity=force_granularity,
-                )[kind]
-                if rows:
-                    yield pd.DataFrame(rows)
+                )
+                yield from decoded_frames(parsed, with_meta)
 
     return gen
+
+
+def decode_pbf(
+    spark: SparkSession,
+    path: str,
+    target_split_bytes: int = 32 * 1024 * 1024,
+    with_meta: bool = False,
+    force_granularity: int | None = None,
+) -> DataFrame:
+    """path: file/dir/glob of .pbf files -> the decoded frame
+    (sources.osmxml.DECODED_SCHEMA, plus the author columns with
+    with_meta). Parallelism is per blob-range split (intra-file),
+    not per file: one planet.pbf fans out to
+    ceil(size/target_split_bytes) tasks, each parsing its range
+    once.
+
+    Executors open the file path directly (local/NFS semantics, the
+    same contract local[n] gives every source here); a cluster
+    deployment points `path` at a shared filesystem."""
+    paths = _expand(path)
+    splits = plan_splits(paths, target_split_bytes)
+    if not splits:
+        splits = [(p, 0, 0) for p in paths]
+    # split i is row i of a range with one row per partition: one
+    # split per task without a shuffle
+    schema = DECODED_META_SCHEMA if with_meta else DECODED_SCHEMA
+    return spark.range(
+        len(splits), numPartitions=len(splits)
+    ).mapInPandas(
+        _range_reader(splits, with_meta, force_granularity), schema
+    )
 
 
 def read_pbf(
@@ -488,33 +529,12 @@ def read_pbf(
     with_meta: bool = False,
     force_granularity: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """path: file/dir/glob of .pbf files. Parallelism is per
-    blob-range split (intra-file), not per file: one planet.pbf
-    fans out to ceil(size/target_split_bytes) tasks.
-
-    Executors open the file path directly (local/NFS semantics, the
-    same contract local[n] gives every source here); a cluster
-    deployment points `path` at a shared filesystem."""
-    paths = _expand(path)
-    splits = plan_splits(paths, target_split_bytes)
-    if not splits:
-        splits = [(p, 0, 0) for p in paths]
-    sdf = spark.createDataFrame(
-        splits, "path string, start long, end long"
-    ).repartition(len(splits), F.col("path"), F.col("start"))
-    from .osmxml import (
-        NODES_META_SCHEMA,
-        RELS_META_SCHEMA,
-        WAYS_META_SCHEMA,
+    """(nodes, ways, rels) of .pbf files: filters of decode_pbf's
+    one decoded frame, so each split is parsed once per action for
+    all three kinds."""
+    return split_decoded(
+        decode_pbf(
+            spark, path, target_split_bytes, with_meta,
+            force_granularity,
+        )
     )
-
-    ns, ws, rs = (
-        (NODES_META_SCHEMA, WAYS_META_SCHEMA, RELS_META_SCHEMA)
-        if with_meta
-        else (NODES_SCHEMA, WAYS_SCHEMA, RELS_SCHEMA)
-    )
-    fg = force_granularity
-    nodes = sdf.mapInPandas(_range_reader(0, with_meta, fg), ns)
-    ways = sdf.mapInPandas(_range_reader(1, with_meta, fg), ws)
-    rels = sdf.mapInPandas(_range_reader(2, with_meta, fg), rs)
-    return nodes, ways, rels

@@ -16,15 +16,22 @@ Two paths, mirroring how Parquet sinks behave:
   self-contained, so per-range chunks concatenate byte-identically
   to a serial render); the driver only streams header + chunks +
   footer, so its memory is O(1 chunk) and its CPU is I/O-bound.
+
+Both paths range-partition each kind on its own and then encode all
+three kinds in ONE action: the union of the kinds' sorted range
+partitions, coalesced to at most one task per core, feeds one
+Python encode stage, instead of three serial per-kind jobs of
+`parts` tasks each.
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Iterator
+from functools import partial, reduce
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from .o5m import encode_o5m
 from .osmxml import encode_osm_xml
@@ -43,7 +50,9 @@ def _encode(fmt: str, nodes, ways, rels) -> bytes:
     raise ValueError(f"unknown wire format {fmt!r}")
 
 
-_META_INT = ("version", "timestamp", "changeset", "uid")
+_NULLABLE_INT = (
+    "lat_i", "lon_i", "version", "timestamp", "changeset", "uid"
+)
 
 
 def _rows(pdf: pd.DataFrame) -> list[dict]:
@@ -56,9 +65,10 @@ def _rows(pdf: pd.DataFrame) -> list[dict]:
             r["members"] = [dict(m) for m in r["members"]]
         if "refs" in r and r["refs"] is not None:
             r["refs"] = list(r["refs"])
-        # pandas turns nullable int meta columns into float NaN,
-        # which is truthy — normalize back to None / int
-        for c in _META_INT:
+        # pandas turns int columns holding nulls (author fields, and
+        # coordinates in a batch shared with ways or relations) into
+        # float NaN, which is truthy — normalize back to None / int
+        for c in _NULLABLE_INT:
             if c in r:
                 v = r[c]
                 r[c] = None if pd.isna(v) else int(v)
@@ -67,29 +77,83 @@ def _rows(pdf: pd.DataFrame) -> list[dict]:
     return recs
 
 
-def _part_writer(fmt: str, kind: str, out_dir: str):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
+def _writer(encode, name: str, columns: dict[str, list[str]]):
+    """mapInPandas body over the kinds' range partitions: each run
+    of rows with one (`_kind`, `_part`) is one chunk, encoded with
+    encode(nodes, ways, rels) -> bytes from the kind's own `columns`,
+    written to name.format(kind=, part=), and reported as one
+    manifest row. `_part` is the kind's own range-partition index,
+    carried in the data because TaskContext's partition id numbers
+    the partitions of all kinds together."""
 
-        pid = TaskContext.get().partitionId()
-        rows: list[dict] = []
-        for b in batches:
-            rows.extend(_rows(b))
-        if not rows:
-            return
+    def write(kind: str, part: int, rows: list[dict]) -> pd.DataFrame:
         args = {"nodes": [], "ways": [], "rels": []}
         args[kind] = rows
-        data = _encode(fmt, args["nodes"], args["ways"], args["rels"])
-        path = os.path.join(
-            out_dir, f"part-{kind}-{pid:05d}.{_EXT[fmt]}"
-        )
+        path = name.format(kind=kind, part=int(part))
         with open(path, "wb") as f:
-            f.write(data)
-        yield pd.DataFrame(
+            f.write(encode(args["nodes"], args["ways"], args["rels"]))
+        return pd.DataFrame(
             [{"path": path, "kind": kind, "n_rows": len(rows)}]
         )
 
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        key, rows = None, []
+        for b in batches:
+            for k, g in b.groupby(["_kind", "_part"], sort=False):
+                if k != key:
+                    if rows:
+                        yield write(*key, rows)
+                    key, rows = k, []
+                rows.extend(_rows(g[columns[k[0]]]))
+        if rows:
+            yield write(*key, rows)
+
     return gen
+
+
+def _write_kinds(frames, parts: int, encode, name: str) -> list[dict]:
+    """Encode each kind's frame in `parts` id ranges and collect the
+    manifest rows of all kinds in ONE action. Each kind keeps its own
+    repartitionByRange, so chunk boundaries (and the bytes) do not
+    depend on the other kinds. The union of the kinds' sorted range
+    partitions is coalesced to at most one task per core (a Python
+    task has a fixed cost, ~0.25 CPU-s on a 4-core host even when it
+    is empty); a coalesced task reads whole partitions one after
+    another, so each chunk still reaches one task as one contiguous
+    run. Returns the manifest rows kind by kind, each kind in range
+    order."""
+    kinds = [
+        (kind, df)
+        for kind, df in zip(("nodes", "ways", "rels"), frames)
+        if df is not None
+    ]
+    if not kinds:
+        return []
+    ranged = [
+        df.repartitionByRange(parts, "id")
+        .sortWithinPartitions("id")
+        .select(
+            "*",
+            F.lit(kind).alias("_kind"),
+            F.spark_partition_id().alias("_part"),
+        )
+        for kind, df in kinds
+    ]
+    union = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), ranged
+    )
+    cores = union.sparkSession.sparkContext.defaultParallelism
+    out = union.coalesce(min(parts * len(kinds), cores)).mapInPandas(
+        _writer(encode, name, {kind: df.columns for kind, df in kinds}),
+        "path string, kind string, n_rows long",
+    )
+    # coalescing mixes the kinds' partitions: restore kind order, then
+    # range order (the zero-padded range index in the file name)
+    order = {kind: k for k, (kind, _df) in enumerate(kinds)}
+    return sorted(
+        (r.asDict() for r in out.collect()),
+        key=lambda r: (order[r["kind"]], r["path"]),
+    )
 
 
 def write_wire_dir(
@@ -105,22 +169,12 @@ def write_wire_dir(
     each part id-sorted AND the id ranges disjoint, so any part is
     a valid extract on its own."""
     os.makedirs(out_dir, exist_ok=True)
-    manifest = []
-    for kind, df in (
-        ("nodes", nodes), ("ways", ways), ("rels", rels)
-    ):
-        if df is None:
-            continue
-        part = (
-            df.repartitionByRange(parts, "id")
-            .sortWithinPartitions("id")
-            .mapInPandas(
-                _part_writer(fmt, kind, out_dir),
-                "path string, kind string, n_rows long",
-            )
-        )
-        manifest.extend(r.asDict() for r in part.collect())
-    return manifest
+    return _write_kinds(
+        (nodes, ways, rels),
+        parts,
+        partial(_encode, fmt),
+        os.path.join(out_dir, "part-{kind}-{part:05d}." + _EXT[fmt]),
+    )
 
 
 def _iter_rows(df: DataFrame) -> list[dict]:
@@ -158,31 +212,6 @@ def _encode_body(fmt: str, nodes, ways, rels) -> bytes:
     if fmt == "pbf":
         return encode_pbf_body(nodes, ways, rels)
     raise ValueError(f"unknown wire format {fmt!r}")
-
-
-def _body_writer(fmt: str, kind: str, out_dir: str):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        rows: list[dict] = []
-        for b in batches:
-            rows.extend(_rows(b))
-        if not rows:
-            return
-        args = {"nodes": [], "ways": [], "rels": []}
-        args[kind] = rows
-        data = _encode_body(
-            fmt, args["nodes"], args["ways"], args["rels"]
-        )
-        path = os.path.join(out_dir, f"chunk-{kind}-{pid:05d}.bin")
-        with open(path, "wb") as f:
-            f.write(data)
-        yield pd.DataFrame(
-            [{"path": path, "kind": kind, "n_rows": len(rows)}]
-        )
-
-    return gen
 
 
 _XML_HEADER = (
@@ -262,25 +291,12 @@ def write_wire_single(
         dir=os.path.dirname(os.path.abspath(path)) or ".",
     )
     try:
-        chunks: dict[str, list[str]] = {
-            "nodes": [], "ways": [], "rels": []
-        }
-        for kind, df in (
-            ("nodes", nodes), ("ways", ways), ("rels", rels)
-        ):
-            if df is None:
-                continue
-            part = (
-                df.repartitionByRange(parts, "id")
-                .sortWithinPartitions("id")
-                .mapInPandas(
-                    _body_writer(fmt, kind, tmp_dir),
-                    "path string, kind string, n_rows long",
-                )
-            )
-            chunks[kind] = sorted(
-                r["path"] for r in part.collect()
-            )
+        chunks = _write_kinds(
+            (nodes, ways, rels),
+            parts,
+            partial(_encode_body, fmt),
+            os.path.join(tmp_dir, "chunk-{kind}-{part:05d}.bin"),
+        )
         header = _pbf_header() if fmt == "pbf" else _HEADERS[fmt]
         if file_timestamp is not None and fmt == "o5m":
             # --timestamp=: the 0xdc timestamp dataset sits BETWEEN
@@ -310,10 +326,9 @@ def write_wire_single(
             )
         with open(path, "wb") as f:
             f.write(header)
-            for kind in ("nodes", "ways", "rels"):
-                for chunk in chunks[kind]:
-                    with open(chunk, "rb") as c:
-                        shutil.copyfileobj(c, f)
+            for chunk in chunks:
+                with open(chunk["path"], "rb") as c:
+                    shutil.copyfileobj(c, f)
             f.write(_FOOTERS[fmt])
     finally:
         shutil.rmtree(tmp_dir, ignore_errors=True)

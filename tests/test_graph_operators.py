@@ -135,6 +135,43 @@ def test_rel_geometry_iterative_chain(spark):
     assert out[3] == (130, 1300)  # LAST member position, not middle
 
 
+def _rel_chain(spark, depth: int):
+    """rel 1 holds node 10, rel i+1 holds rel i, up to rel `depth`."""
+    positions = spark.createDataFrame(
+        [(10, 100, 1000)], "ref_id long, x long, y long"
+    )
+    members = spark.createDataFrame(
+        [(1, 1, 10, False, True)]
+        + [(i + 1, 1, i, True, True) for i in range(1, depth)],
+        "rel_id long, j int, ref_id long, is_rel boolean, "
+        "is_area boolean",
+    )
+    return members, positions
+
+
+def test_rel_geometry_warns_at_cap(spark, caplog):
+    """A 14-relation chain resolves relations 1-12 in the 12 passes
+    and says that the cap bound; a 3-level chain stays silent."""
+    import logging
+
+    from osmgraft.operators.graph import rel_geometry
+
+    with caplog.at_level(logging.WARNING, logger="osmgraft"):
+        out = rel_geometry(*_rel_chain(spark, 14)).collect()
+    assert sorted(r.rel_id for r in out) == list(range(1, 13))
+    msgs = [r.getMessage() for r in caplog.records]
+    assert any(
+        "relation geometry stopped at 12 passes with 2 relations"
+        in m for m in msgs
+    ), msgs
+
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="osmgraft"):
+        out = rel_geometry(*_rel_chain(spark, 3)).collect()
+    assert sorted(r.rel_id for r in out) == [1, 2, 3]
+    assert not caplog.records
+
+
 def test_rel_closure_chain_and_cap(spark):
     # chain 0 <- 1 <- 2 <- ... <- 15 (parent i references child i-1)
     rels = spark.createDataFrame(

@@ -482,3 +482,81 @@ def test_survival_no_subject_explosion(spark):
     plan = _plan(survival_table(df))
     assert "Generate explode" not in plan
     assert "CartesianProduct" not in plan
+
+
+def _node_names(plan) -> list[str]:
+    """Physical operator names of an executed plan, walking into the
+    final adaptive plan and its query stages but NOT into a cached
+    relation's own plan (an InMemoryTableScan reads the cache)."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _node_names(plan.executedPlan())
+    if name.endswith("QueryStage"):
+        return [name] + _node_names(plan.plan())
+    kids = plan.children()
+    out = [name]
+    for i in range(kids.size()):
+        out += _node_names(kids.apply(i))
+    return out
+
+
+@pytest.fixture(scope="module")
+def world_pbf(tmp_path_factory):
+    from osmgraft.sources.osmxml import _parse
+    from osmgraft.wire import encode_pbf
+
+    from .test_o5m_source import _world_xml
+
+    p = tmp_path_factory.mktemp("pbf") / "w.pbf"
+    p.write_bytes(encode_pbf(*_parse(_world_xml(), with_meta=True)))
+    return str(p)
+
+
+def test_persisted_decode_feeds_every_kind(spark, world_pbf):
+    """Once the decoded frame is persisted, nodes, ways and rels are
+    scans of the cache: the Python decode does not run again."""
+    from osmgraft.sources.auto import decode_osm_auto
+    from osmgraft.sources.osmxml import split_decoded
+
+    decoded = decode_osm_auto(spark, world_pbf, with_meta=True).persist()
+    try:
+        for df in split_decoded(decoded):
+            assert df.count() > 0
+            names = _node_names(df._jdf.queryExecution().executedPlan())
+            assert "InMemoryTableScan" in names, names
+            assert "MapInPandas" not in names, names
+    finally:
+        decoded.unpersist()
+
+
+def test_wire_single_encodes_all_kinds_in_one_collect(
+    spark, world_pbf, tmp_path, monkeypatch
+):
+    """write_wire_single encodes all three kinds in one Python stage
+    and one collect, not one action per kind."""
+    from osmgraft.sources.auto import decode_osm_auto
+    from osmgraft.sources.osmxml import split_decoded
+    from osmgraft.wire.spark import write_wire_single
+
+    decoded = decode_osm_auto(spark, world_pbf).persist()
+    frames = split_decoded(decoded)
+    cls = type(decoded)
+    collected = []
+    orig = cls.collect
+
+    def collect(self):
+        collected.append(self)
+        return orig(self)
+
+    monkeypatch.setattr(cls, "collect", collect)
+    try:
+        write_wire_single(*frames, str(tmp_path / "o.o5m"), fmt="o5m")
+    finally:
+        decoded.unpersist()
+    assert len(collected) == 1
+    names = _node_names(
+        collected[0]._jdf.queryExecution().executedPlan()
+    )
+    # the decode reads the cache: the only Python stage is the encode
+    assert names.count("MapInPandas") == 1, names
+    assert names.count("InMemoryTableScan") == 3, names
