@@ -4,9 +4,11 @@
 Equivalent reference invocation (SURVEY.md §3.3):
     osmassignpoly adr.o5m -B=all.poly --use-admin-levels
 
-Plan: parquet/iceberg scan -> ArrowEval(geocode) -> Filter(coords,
-global bbox — Catalyst) -> Project(cell, codegen int math) ->
-ArrowEval(PIP assign vs broadcast PolygonSet) -> Filter(region).
+Plan: parquet/iceberg scan with the geocode prefilter pushed down ->
+Project(geocode term probe, codegen'd Catalyst) -> ArrowEval(PIP
+assign vs broadcast PolygonSet, which also rejects ungeocoded and
+out-of-bbox points) -> Filter(region) -> Project(cell, codegen int
+math).
 Zero shuffles; output partitioning == input partitioning. Writers
 downstream repartition by cell range for spatial locality
 (tiles.py).
@@ -28,8 +30,8 @@ def flagship_assign(pages: DataFrame, polyset=None,
     reference drops no-region nodes by default too)."""
     ps = polyset if polyset is not None else fixture_polyset()
     # NO filter on lat_i/lon_i here: those columns derive from the
-    # expensive geocode regex, and a Catalyst Filter referencing
-    # them forces a second regex evaluation (CSE does not cross
+    # geocode term extraction, and a Catalyst Filter referencing
+    # them forces a second extraction (CSE does not cross
     # Filter/Project boundaries — measured 2x wall time). Nulls ride
     # through as sentinels; the PIP kernel rejects them and the
     # final region filter (on the nondeterministic-marked UDF

@@ -323,10 +323,12 @@ def rel_geometry(
     Plan: node/way member values never change across passes, so
     their box partials and last-valid candidate collapse to one row
     per relation before the loop — the corpus-sized joins stay out
-    of the fixpoint, which iterates on the rel->rel layer only. One
-    job per pass: the pass's batch is a lazy localCheckpoint that
-    the count ending the loop materializes; `done` stays a lazy
-    union of the <= max_passes checkpointed batches.
+    of the fixpoint, which iterates on the rel->rel layer only. The
+    pass's batch is a lazy localCheckpoint that the count ending the
+    loop materializes; `done` stays a lazy union of the <= max_passes
+    checkpointed batches. Under AQE a pass is still several jobs:
+    building the checkpoint's RDD materializes the pass's query
+    stages as jobs of their own before the count runs its 2.
     """
     if not hand_up_box:
         positions = positions.select("ref_id", "x", "y", *_point_box())
@@ -483,10 +485,13 @@ def _closure(
         # probed map-side — no shuffle of the big side per pass.
         # At cluster scale a too-large frontier falls back to a
         # shuffled semi-join automatically (broadcast is a hint).
-        # ONE job per pass: the frontier is a LAZY localCheckpoint,
-        # so the count() both materializes the checkpoint and
-        # returns the emptiness test (round-2: was eager checkpoint
-        # + isEmpty = 2 jobs/pass).
+        # The frontier is a LAZY localCheckpoint, so the count()
+        # both materializes the checkpoint and returns the emptiness
+        # test. That is still not one job per pass under AQE:
+        # building the checkpoint's RDD materializes the pass's
+        # query stages (2 jobs per keep-closure pass of a seeded
+        # PBF convert, 3 on a 6-deep chain) and the count runs 2
+        # more, 4-5 jobs per pass.
         # `flagged` stays a lazy union of checkpointed frontiers —
         # bounded depth (<= max_passes), no per-pass union job.
         parents = edges.join(

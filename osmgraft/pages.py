@@ -11,8 +11,9 @@ the reference's deterministic text handling; tests re-extract from
 
 Geocoding plays the osmgeobase/osmposition role (SURVEY.md G12):
 recognize a gazetteer term in the text and resolve it to fixed-point
-coordinates. Implemented as Arrow-vectorized pandas string ops + a
-broadcast term dictionary — no per-row Python, no shuffle.
+coordinates. Implemented as codegen'd Catalyst expressions against a
+term array and a packed coordinate map literal — no Python, no
+shuffle.
 """
 
 from __future__ import annotations
@@ -129,28 +130,40 @@ def geocode(
     """Resolve each page to fixed-point coords via the gazetteer
     (SURVEY.md G12). Adds lat_i/lon_i (null when no term found).
 
-    One combined regex over the term list; first (leftmost) match
-    wins (the reference geocoder also ranks and takes the top
-    candidate, osmposition.c:1229-1247).
+    The first token (split on single spaces) that is a gazetteer term
+    wins (the reference geocoder also tokenizes its input and takes
+    the top candidate, osmposition.c:966-1101, 1229-1247). A token
+    matches only as a whole: "City05," is not "City05".
 
-    Entirely JVM-side. Two deliberate plan-shape choices (both
-    measured on 1M pages):
+    Entirely JVM-side, and no expression on the hot path falls back
+    to interpreted evaluation (no lambda, no higher-order function):
+    `array_intersect(split(text, " "), array(<terms>))` keeps the
+    left array's order, so its first element is the first matching
+    token, and one lookup in a packed (lat<<32|lon) map literal turns
+    that token into coordinates. Per row this costs O(tokens + terms):
+    `array_intersect` hashes the term array once per row, then probes
+    each token. A corpus-scale gazetteer would want a set built once
+    per task instead; that is out of scope for the 80-term gazetteer.
 
-    - The expensive alternation regex is evaluated EXACTLY ONCE per
-      row: the lat/lon lookup goes through a single packed
-      (lat<<32|lon) map so every downstream column derives from one
-      expression inside one Project. Catalyst's subexpression
-      elimination dedupes within a Project but NOT across
-      Filter/Project boundaries — a plan that filters on a
-      regex-derived column re-runs the regex (observed 2x wall
-      time). Callers must therefore not filter on lat_i/lon_i
-      before the next pipeline barrier; flagship pushes the
-      bbox/null handling into the PIP kernel instead.
+    Two deliberate plan-shape choices (both measured on 1M pages):
+
+    - The term extraction is evaluated EXACTLY ONCE per row: every
+      downstream column derives from the one packed lookup inside
+      one Project. Catalyst's subexpression elimination dedupes
+      within a Project but NOT across Filter/Project boundaries — a
+      plan that filters on an extraction-derived column re-runs the
+      extraction (observed 2x wall time). Callers must therefore not
+      filter on lat_i/lon_i before the next pipeline barrier;
+      flagship pushes the bbox/null handling into the PIP kernel
+      instead.
     - `prefilter` drops obviously-ungeocodable rows with a cheap
       substring `contains` on the RAW text (longest common prefix
-      of the gazetteer, if >= 3 chars) before the regex ever runs.
+      of the gazetteer, if >= 3 chars) before the extraction runs.
       It is conservative: contains(prefix) is implied by any term
       match, so no geocodable row is lost.
+
+    Gazetteers with multi-word terms fall back to one alternation
+    regex with substring semantics (leftmost match wins).
     """
     terms, lat_i, lon_i, _w = gazetteer_arrays()
 
@@ -173,20 +186,17 @@ def geocode(
         term = F.regexp_extract(F.col(text_col), pattern, 1)
         packed = F.try_element_at(packed_map, term)
     else:
-        # token hash-lookup path: split -> per-token map probe ->
-        # first hit. O(tokens) hash lookups instead of O(chars x
-        # alternatives) regex backtracking — measured 2.3x faster
-        # and it mirrors the reference geocoder, which tokenizes
-        # its input rather than substring-scanning
-        # (osmposition.c:966-1101). try_element_at everywhere:
-        # missing key / empty hit list yield NULL under ANSI.
-        toks = F.split(F.col(text_col), " ")
-        packed_all = F.transform(
-            toks, lambda t: F.try_element_at(packed_map, t)
+        # token path: the first split token that is a term, then one
+        # map probe. try_element_at everywhere: an empty intersection
+        # or a missing key yields NULL under ANSI.
+        first = F.try_element_at(
+            F.array_intersect(
+                F.split(F.col(text_col), " "),
+                F.array(*[F.lit(t) for t in terms]),
+            ),
+            F.lit(1),
         )
-        packed = F.try_element_at(
-            F.filter(packed_all, lambda x: x.isNotNull()), F.lit(1)
-        )
+        packed = F.try_element_at(packed_map, first)
     return pages.withColumns(
         {
             "lat_i": F.shiftright(packed, 32).cast("long"),

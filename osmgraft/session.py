@@ -4,13 +4,36 @@ Tuned for the target profile (BASELINE.json): huge scans, broadcast
 spatial joins, Arrow-batched pandas UDF kernels, AQE for skew.
 Defaults assume local[N] in the sandbox; on a real cluster the same
 conf ships via spark-submit --py-files and only master/memory change.
+Python workers fork from `osmgraft._worker` when they can import it,
+so a task does not re-read pyspark.zip.
 """
 
 from __future__ import annotations
 
 import os
+import site
+from importlib.machinery import PathFinder
 
 from pyspark.sql import SparkSession
+
+from . import _worker
+
+
+def _worker_daemon() -> dict:
+    """`spark.python.daemon.module` for `osmgraft._worker` when the
+    Python workers of a new local session can import it, else nothing
+    (pyspark's stock daemon). Spark starts the daemon with `python -m`
+    in the JVM's cwd (this process's) and the JVM's PYTHONPATH (this
+    process's), before any --py-files zip is on the path."""
+    if not _worker.supported():
+        return {}
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+             *site.getsitepackages()]
+    spec = PathFinder.find_spec("osmgraft", [p for p in paths if p])
+    dirs = (spec.submodule_search_locations or []) if spec else []
+    if not any(os.path.isfile(os.path.join(d, "_worker.py")) for d in dirs):
+        return {}
+    return {"spark.python.daemon.module": "osmgraft._worker"}
 
 
 def get_spark(
@@ -56,6 +79,6 @@ def get_spark(
             "InferFiltersFromGenerate",
         )
     )
-    for k, v in (extra or {}).items():
+    for k, v in {**_worker_daemon(), **(extra or {})}.items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -184,8 +184,10 @@ def test_wire_dir_names_parts_per_kind(spark, world, tmp_path):
         assert ids == sorted(r["id"] for r in want[k])
 
 
-def _persisted(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persisted(spark) -> set:
+    """Ids of the persisted RDDs. Compared as sets: RDDs that earlier
+    tests left for the ContextCleaner may be released meanwhile."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 def test_convert_leaves_nothing_persisted(spark, tmp_path):
@@ -203,8 +205,8 @@ def test_convert_leaves_nothing_persisted(spark, tmp_path):
     args = [str(osm), f"-B={poly}", "--complete-ways"]
     before = _persisted(spark)
     convert(spark, args + [f"-o={tmp_path / 'out.o5m'}"])
-    assert _persisted(spark) == before
+    assert _persisted(spark) <= before
     with pytest.raises(SystemExit, match="unknown output extension"):
         convert(spark, args + [f"-o={tmp_path / 'out.xyz'}"])
-    assert _persisted(spark) == before
+    assert _persisted(spark) <= before
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -4,8 +4,14 @@ osmassignpoly on the same points and polygons."""
 
 import numpy as np
 import pytest
+from hypothesis import example, given, settings, strategies as st
 
-from osmgraft.fixtures import POLY_TEXT, fixture_polyset, gazetteer_arrays
+from osmgraft.fixtures import (
+    POLY_TEXT,
+    fixture_polyset,
+    gazetteer_arrays,
+    place_for_doc,
+)
 from osmgraft.operators.flagship import flagship_assign
 from osmgraft.pages import extract_text, synth_pages
 
@@ -38,15 +44,67 @@ def test_geocode_hits_gazetteer(spark, pages):
     from osmgraft.pages import geocode
 
     g = geocode(pages).select("doc_id", "lat_i", "lon_i").collect()
-    terms, lat_i, lon_i, _ = gazetteer_arrays()
-    coords = set(zip(lat_i.tolist(), lon_i.tolist()))
-    n_hit = 0
-    for r in g:
-        if r.lat_i is not None:
-            assert (r.lat_i, r.lon_i) in coords
-            n_hit += 1
+    got = {r.doc_id: (r.lat_i, r.lon_i) for r in g}
+    _, lat_i, lon_i, _ = gazetteer_arrays()
+    ids = np.array([r.doc_id for r in pages.select("doc_id").collect()])
+    # each page resolves to exactly the city planted in it; the
+    # prefilter drops the pages that carry no place
+    want = {
+        int(d): (int(lat_i[c]), int(lon_i[c]))
+        for d, c in zip(ids, place_for_doc(ids))
+        if c >= 0
+    }
+    assert got == want
     # ~90% of pages carry a place string
-    assert 0.8 * N <= n_hit <= 0.97 * N
+    assert 0.8 * N <= len(got) <= 0.97 * N
+
+
+_TERMS = gazetteer_arrays()[0]
+_TOKENS = st.sampled_from(
+    [*_TERMS[:3], _TERMS[-1], "City", "City5", "city01", "xCity02",
+     _TERMS[1] + ",", "(" + _TERMS[2] + ")", "page", ""]
+)
+_TEXTS = st.one_of(
+    st.none(),
+    st.builds(
+        lambda toks, sep: sep.join(toks),
+        st.lists(_TOKENS, max_size=6),
+        st.sampled_from([" ", "  "]),
+    ),
+)
+
+
+def _first_term(text):
+    """Reference: the first space-separated token that is a term."""
+    _, lat_i, lon_i, _ = gazetteer_arrays()
+    at = {t: (int(la), int(lo)) for t, la, lo in zip(_TERMS, lat_i, lon_i)}
+    for tok in (text or "").split(" "):
+        if tok in at:
+            return at[tok]
+    return (None, None)
+
+
+@settings(max_examples=25, deadline=None)
+@example([f"at {_TERMS[1]} and {_TERMS[0]}", f"near {_TERMS[2]}, downtown",
+          f"{_TERMS[3]},  then  {_TERMS[4]}", "", None])
+@given(st.lists(_TEXTS, min_size=1, max_size=8))
+def test_geocode_first_term_wins(spark, texts):
+    """geocode == a Python first-token-wins reference, with and without
+    the prefilter (which only drops rows lacking the terms' prefix)."""
+    from osmgraft.pages import geocode
+
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+    for prefilter in (False, True):
+        got = {
+            r.i: (r.lat_i, r.lon_i)
+            for r in geocode(df, prefilter=prefilter).collect()
+        }
+        want = {
+            i: _first_term(t)
+            for i, t in enumerate(texts)
+            if not prefilter or (t is not None and "City" in t)
+        }
+        assert got == want, prefilter
 
 
 def test_flagship_differential_vs_reference(spark, pages, tmp_path):

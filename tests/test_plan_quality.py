@@ -49,6 +49,9 @@ def test_flagship_plan_shape(pages):
     assert plan.count("ArrowEvalPython (") == 1
     # zero shuffles: broadcast polygons, partition-local points
     assert "Exchange" not in plan
+    # geocode has no lambda: higher-order functions fall back to
+    # interpreted evaluation, which cost more than the PIP join
+    assert "lambdafunction" not in plan
 
 
 def test_flagship_single_extraction(pages):

@@ -25,6 +25,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+import time
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -284,16 +285,22 @@ def main() -> None:
 
     spark = get_spark()
     rows = []
-    for name, fn in QUERIES.items():
+    for i, (name, fn) in enumerate(QUERIES.items(), 1):
         full = name not in ITERATIVE_TRUNCATED
+        # progress on stderr: a capture that hangs is the last name
+        # printed without its elapsed seconds
+        print(f"[{i}/{len(QUERIES)}] {name} ...", end="", file=sys.stderr,
+              flush=True)
+        t0 = time.monotonic()
         try:
             plan = _capture_plan(spark, fn, sf_dir, full)
             m = plan_metrics(plan)
             m["truncated"] = not full
         except Exception as exc:  # pragma: no cover
             rows.append((name, None, str(exc)[:80]))
-            continue
-        rows.append((name, m, None))
+        else:
+            rows.append((name, m, None))
+        print(f" {time.monotonic() - t0:.1f} s", file=sys.stderr, flush=True)
 
     lines = [
         "# Physical-plan audit (auto-generated by tools/plan_audit.py)",
