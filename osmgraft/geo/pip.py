@@ -56,8 +56,9 @@ class EdgeSet:
     bbox: tuple[int, int, int, int] = field(default=None)
     # exactly-vertical segments (dropped from the crossing-count
     # arrays per osmconvert.c:1907-1910, but still part of the
-    # geometric BOUNDARY — the cell-cover classifier needs them to
-    # mark boundary cells; crossings() never looks at these)
+    # geometric BOUNDARY — operators/spatial.border_edge_list needs
+    # them for point-to-border distances; crossings() never looks
+    # at these)
     vx: np.ndarray = field(default=None)   # int64
     vy1: np.ndarray = field(default=None)  # int64, vy1 <= vy2
     vy2: np.ndarray = field(default=None)
@@ -111,7 +112,7 @@ def build_edges(rings, bbox_from_vertices: bool = True) -> EdgeSet:
         ax, ay, bx, by = xs[:-1], ys[:-1], xs[1:], ys[1:]
         keep = ax != bx  # drop exact north-south edges
         # ... from the crossing arrays only; retain them as boundary
-        # segments for the cell-cover classifier (geo/cover.py)
+        # segments for the border distance (spatial.border_edge_list)
         vert = ~keep & (ay != by)
         if vert.any():
             vvx.append(ax[vert])

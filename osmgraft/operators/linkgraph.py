@@ -16,7 +16,11 @@ runs and could never be hash-compared against an oracle.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, functions as F
+
+_LOG = logging.getLogger("osmgraft")
 
 
 def host_pagerank(
@@ -181,11 +185,10 @@ def k_core(
     the relation closures use). Peeling is monotone, so stopping
     early at a stable pass equals running all `max_passes` — which
     is what lets the SQL oracle simply unroll the full pass count.
-    Warns if still shrinking at the cap (the q44/q27 convention).
+    Logs a warning on the `osmgraft` logger if still shrinking at
+    the cap (the q44/q27 convention).
 
     Returns distinct (host,) vertices of the k-core."""
-    import warnings
-
     und = (
         edges.select(
             F.least("src", "dst").alias("a"),
@@ -219,10 +222,11 @@ def k_core(
             break
         cur, n_cur = nxt, n_nxt
     else:
-        warnings.warn(
-            f"k_core: still peeling after {max_passes} passes; "
-            "result is the pass-capped superset",
-            stacklevel=2,
+        _LOG.warning(
+            "k_core stopped at %d passes with %d edges left and "
+            "still peeling; result is the pass-capped superset",
+            max_passes,
+            n_cur,
         )
     return (
         cur.select(F.col("a").alias("host"))

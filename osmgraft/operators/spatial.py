@@ -79,107 +79,6 @@ _ASSIGN_SCHEMA = StructType(
     ]
 )
 
-# OPT-IN ONLY (default 0 = disabled): polygon sets up to this many
-# total edges can be evaluated JVM-side as pure Catalyst expressions
-# (assign_regions fast path). MEASURED NEGATIVE RESULT on 4M pages:
-# the inlined edge-CASE chains blow up generated code (codegen
-# fallback) and, being deterministic, the region filter pushes down
-# and DUPLICATES the whole geocode+PIP chain into a scan Filter —
-# >10x slower than the Arrow kernel. The numpy kernel wins because
-# it is vectorized once per batch and its nondeterministic marking
-# blocks the duplicating pushdown. Kept for small-data uses and as
-# the equivalence reference (tests/test_assign_paths_equiv.py).
-JVM_EDGE_LIMIT = 0
-
-
-def _inside_expr(
-    lon: Column, lat: Column, es, bbox: tuple[int, int, int, int]
-) -> Column:
-    """Exact border_queryinside crossing parity as a Catalyst
-    expression over edge literals (same int64 arithmetic as the
-    numpy kernel and the C original; identical formula to the
-    DuckDB oracle's crossing predicate)."""
-    bx1, by1, bx2, by2 = bbox
-    ok = (
-        (lon >= F.lit(int(bx1)))
-        & (lon <= F.lit(int(bx2)))
-        & (lat >= F.lit(int(by1)))
-        & (lat <= F.lit(int(by2)))
-    )
-    terms = []
-    for x1, y1, x2, y2 in zip(
-        es.x1.tolist(), es.y1.tolist(), es.x2.tolist(), es.y2.tolist()
-    ):
-        n1 = F.lit(y1) > lat
-        n2 = F.lit(y2) > lat
-        south = (lat - F.lit(y1)) * F.lit(x2 - x1) < (
-            lon - F.lit(x1)
-        ) * F.lit(y2 - y1)
-        hit = (
-            (F.lit(x1) <= lon)
-            & (lon < F.lit(x2))
-            & ((n1 & n2) | ((n1 != n2) & south))
-        )
-        terms.append(F.when(hit, F.lit(1)).otherwise(F.lit(0)))
-    total = terms[0]
-    for t in terms[1:]:
-        total = total + t
-    return ok & (total % 2 == 1)
-
-
-def _assign_columns_catalyst(
-    polyset: PolygonSet, lat_col: str, lon_col: str
-) -> tuple[Column, Column, Column]:
-    """JVM-side N-polygon assignment via the closed form of the
-    reference's order-dependent selection (property-verified
-    equivalent to the state machine at osmassignpoly.c:1758-1783;
-    same form as the DuckDB oracle):
-        region    = inside poly minimizing (admin, idx)
-        subregion = inside poly maximizing (admin, -idx),
-                    iff max(admin) > min(admin)
-    Returns (region, subregion, region_admin) columns."""
-    lon, lat = F.col(lon_col), F.col(lat_col)
-    cands = []
-    for i, es in enumerate(polyset.polys):
-        bbox = (
-            int(polyset.bbx1[i]),
-            int(polyset.bby1[i]),
-            int(polyset.bbx2[i]),
-            int(polyset.bby2[i]),
-        )
-        admin = int(polyset.admin_levels[i])
-        cands.append(
-            F.when(
-                _inside_expr(lon, lat, es, bbox),
-                F.struct(
-                    F.lit(admin).alias("a"), F.lit(i).alias("i")
-                ),
-            )
-        )
-    arr = F.array_compact(F.array(*cands))
-    names = F.lit(list(polyset.names))
-    rmin = F.array_min(arr)  # lexicographic (admin, idx) minimum
-    # (admin desc, idx asc) first == max over (admin, -idx)
-    rmax = F.array_max(
-        F.transform(
-            arr,
-            lambda s: F.struct(
-                s.a.alias("a"), (-s.i).alias("ni")
-            ),
-        )
-    )
-    # guard explicitly on a non-empty candidate set: element_at
-    # treats negative indexes as from-the-end, so feeding it the
-    # null-propagated index of an empty array's min can silently
-    # wrap to the LAST polygon (observed) instead of returning null
-    has = F.size(arr) > 0
-    region = F.when(has, F.element_at(names, rmin.i + F.lit(1)))
-    subregion = F.when(
-        has & (rmax.a > rmin.a),
-        F.element_at(names, -rmax.ni + F.lit(1)),
-    )
-    return region, subregion, F.when(has, rmin.a).cast("int")
-
 
 def assign_regions(
     df: DataFrame,
@@ -201,25 +100,6 @@ def assign_regions(
             bbox_contains(F.col(lon_col), F.col(lat_col),
                           gx1, gy1, gx2, gy2)
         )
-
-    total_edges = sum(p.n_edges for p in polyset.polys)
-    if 0 < total_edges <= JVM_EDGE_LIMIT:
-        # small polygon set: evaluate entirely JVM-side — the whole
-        # assignment stays in whole-stage codegen, no Python stage,
-        # no broadcast variable, no Arrow transfer
-        region, subregion, radmin = _assign_columns_catalyst(
-            polyset, lat_col, lon_col
-        )
-        out = df.withColumns(
-            {
-                "region": region,
-                "subregion": subregion,
-                "region_admin": radmin,
-            }
-        )
-        if not keep_noregion:
-            out = out.filter(F.col("region").isNotNull())
-        return out
 
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(polyset)
@@ -254,159 +134,6 @@ def assign_regions(
     # result feeds both a filter and the output projection (observed
     # double evaluation: 2x Arrow transfer + 2x PIP kernel)
     _assign = _assign.asNondeterministic()
-
-    out = df.withColumn("_a", _assign(F.col(lat_col), F.col(lon_col)))
-    out = (
-        out.withColumn("region", F.col("_a.region"))
-        .withColumn("subregion", F.col("_a.subregion"))
-        .withColumn("region_admin", F.col("_a.region_admin"))
-        .drop("_a")
-    )
-    if not keep_noregion:
-        out = out.filter(F.col("region").isNotNull())
-    return out
-
-
-def assign_regions_cover(
-    df: DataFrame,
-    polyset: PolygonSet,
-    lat_col: str = "lat_i",
-    lon_col: str = "lon_i",
-    keep_noregion: bool = False,
-    shift: int = DEFAULT_SHIFT,
-    max_cells: int | None = None,
-) -> DataFrame:
-    """`assign_regions` routed through the decided-cell cover
-    (geo/cover.py) — the S2-style two-stage spatial join.
-
-    Identical output to `assign_regions` (tested + same oracle);
-    different physical work: a driver-built, broadcast cell grid
-    classifies each point with two shifts and one array load, and
-    ONLY points in boundary cells (the ~perimeter/area fraction)
-    take the exact ray-cast kernel. Still one scan, one Arrow
-    stage, zero shuffles — the cover replaces most of the PIP
-    arithmetic, not the plan shape.
-
-    At 100 TB: the grid is O(max_cells) bytes broadcast once per
-    executor; the exact-kernel fraction shrinks with cell size, so
-    `max_cells` is the compute-vs-memory knob (default 2^16 cells
-    ≈ 0.6 MB of int32 grids).
-    """
-    from ..geo.cover import DEFAULT_MAX_CELLS, build_cell_cover
-
-    import numpy as np
-
-    cover = build_cell_cover(
-        polyset, shift=shift,
-        max_cells=max_cells or DEFAULT_MAX_CELLS,
-    )
-    if len(polyset) and not keep_noregion:
-        gx1, gy1, gx2, gy2 = polyset.global_bbox
-        df = df.filter(
-            bbox_contains(F.col(lon_col), F.col(lat_col),
-                          gx1, gy1, gx2, gy2)
-        )
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(cover)
-    admin_by_idx = polyset.admin_levels
-
-    @F.pandas_udf(_ASSIGN_SCHEMA)
-    def _assign(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        cov = bc.value
-        px = lon.fillna(2_000_000_000).to_numpy("int64")
-        py = lat.fillna(2_000_000_000).to_numpy("int64")
-        r, s, needs = cov.classify(px, py)
-        if needs.any():
-            re_, se_ = assign_polygons(px[needs], py[needs], cov.polyset)
-            r[needs] = re_
-            s[needs] = se_
-        names = np.array(
-            list(cov.polyset.names) + [None], dtype=object
-        )
-        admins = np.append(admin_by_idx, 0)
-        adm = pd.Series(admins[r], dtype="Int32")
-        adm[r < 0] = None
-        return pd.DataFrame(
-            {"region": names[r], "subregion": names[s],
-             "region_admin": adm}
-        )
-
-    _assign = _assign.asNondeterministic()  # see assign_regions
-
-    out = df.withColumn("_a", _assign(F.col(lat_col), F.col(lon_col)))
-    out = (
-        out.withColumn("region", F.col("_a.region"))
-        .withColumn("subregion", F.col("_a.subregion"))
-        .withColumn("region_admin", F.col("_a.region_admin"))
-        .drop("_a")
-    )
-    if not keep_noregion:
-        out = out.filter(F.col("region").isNotNull())
-    return out
-
-
-def assign_regions_rtree(
-    df: DataFrame,
-    polyset: PolygonSet,
-    lat_col: str = "lat_i",
-    lon_col: str = "lon_i",
-    keep_noregion: bool = False,
-    cap: int = 16,
-) -> DataFrame:
-    """`assign_regions` routed through a broadcast STR-packed
-    polygon R-tree (geo/rtree.py).
-
-    Identical output to `assign_regions` (same oracle; randomized
-    equality tested in tests/test_rtree.py): the tree returns
-    exactly the per-polygon bbox candidates of the linear scan, and
-    the same order-dependent admin-level state machine runs over
-    them. Different physical work: candidate discovery is an
-    O(log P) MBR descent instead of an O(P) bbox sweep per batch —
-    the right strategy when the polygon set is large (thousands of
-    admin boundaries) and most polygons never see a given batch's
-    points.
-
-    At 100 TB: the packed tree is a few int64 arrays (~64 B per
-    polygon), broadcast once per executor; the point side never
-    shuffles — one scan, one Arrow stage, zero Exchange, the same
-    plan shape assign_regions is plan-tested to.
-    """
-    from ..geo.rtree import assign_polygons_rtree, build_polyset_rtree
-
-    if len(polyset) and not keep_noregion:
-        gx1, gy1, gx2, gy2 = polyset.global_bbox
-        df = df.filter(
-            bbox_contains(F.col(lon_col), F.col(lat_col),
-                          gx1, gy1, gx2, gy2)
-        )
-    tree = build_polyset_rtree(polyset, cap=cap)
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast((polyset, tree))
-    admin_by_idx = polyset.admin_levels
-
-    @F.pandas_udf(_ASSIGN_SCHEMA)
-    def _assign(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        ps, tr = bc.value
-        r, s = assign_polygons_rtree(
-            lon.fillna(2_000_000_000).to_numpy("int64"),
-            lat.fillna(2_000_000_000).to_numpy("int64"),
-            ps,
-            tr,
-        )
-        names = np.array(list(ps.names) + [None], dtype=object)
-        admins = np.append(admin_by_idx, 0)
-        adm = pd.Series(admins[r], dtype="Int32")
-        adm[r < 0] = None
-        return pd.DataFrame(
-            {"region": names[r], "subregion": names[s],
-             "region_admin": adm}
-        )
-
-    _assign = _assign.asNondeterministic()  # see assign_regions
 
     out = df.withColumn("_a", _assign(F.col(lat_col), F.col(lon_col)))
     out = (
@@ -617,7 +344,7 @@ def hilbert_bbox_filter(
 
 def polyset_frames(spark, polyset: PolygonSet):
     """PolygonSet -> (edges, polys) DataFrames — the polygon side
-    as DATA for assign_regions_partitioned. Edges come out in
+    as DATA for rasterize_polygons. Edges come out in
     geo/pip.build_edges normal form (x1 < x2, exactly-vertical
     edges already dropped from the crossing set). Built as JVM
     literal explodes (LocalRelation), not createDataFrame — no
@@ -658,112 +385,6 @@ def polyset_frames(spark, polyset: PolygonSet):
         .select("p.*")
     )
     return edges, polys
-
-
-def assign_regions_partitioned(
-    df: DataFrame,
-    edges: DataFrame,
-    polys: DataFrame,
-    id_col: str = "doc_id",
-    lat_col: str = "lat_i",
-    lon_col: str = "lon_i",
-    strip_shift: int = 22,
-) -> DataFrame:
-    """The broadcast-free sibling of `assign_regions`, for when the
-    POLYGON side is itself big distributed data (millions of admin
-    polygons / cadastral parcels) and no driver-built index fits.
-    Same output as assign_regions (same q03 oracle, tested equal);
-    entirely different physical plan: both sides shuffle on a
-    longitude-strip key and the exact ray cast runs as a relational
-    parity aggregate — pure Catalyst, no broadcast variable, no
-    Python stage, no driver polygon object.
-
-    edges: (poly_idx, x1, y1, x2, y2) in build_edges normal form
-    (x1 < x2; exactly-vertical edges dropped — they can never
-    satisfy the half-open x1 <= px < px2 crossing window,
-    osmconvert.c:1907-1910). polys: (poly_idx, name, admin,
-    bx1..by2 bbox).
-
-    Plan: each edge explodes to the lon strips its x-span covers
-    (span/2^strip_shift rows — strip_shift is the replication-vs-
-    skew knob); each point computes its strip in-row; ONE shuffle
-    equi-join on strip pairs every point with exactly the edges
-    whose crossing window can contain it (a pair exists iff
-    x1 <= px < x2 can hold, so dropping all other edges cannot
-    change the parity — they contribute 0 crossings). The
-    northward-ray crossing count then becomes SUM(pred) % 2 per
-    (point, polygon) — the same per-edge predicate as the numpy
-    kernel (geo/pip.crossings) and the q03 DuckDB oracle — and the
-    osmassignpoly admin tie-break (closed form of the state
-    machine at osmassignpoly.c:1758-1783) is a min_by/max-style
-    aggregate per point. Dense-city strip skew is plain join-key
-    skew: AQE skew-join splits it, and strip_shift trades edge
-    replication against strip width.
-
-    Returns (id_col, region, subregion) for points inside >= 1
-    polygon — assign_regions' keep_noregion=False contract."""
-    e = edges.join(polys, "poly_idx").withColumn(
-        "_strips",
-        F.sequence(
-            F.shiftright(F.col("x1") + F.lit(LON_OFFSET), strip_shift),
-            F.shiftright(
-                F.col("x2") - F.lit(1) + F.lit(LON_OFFSET), strip_shift
-            ),
-        ),
-    )
-    e = e.select(
-        "poly_idx", "name", "admin", "x1", "y1", "x2", "y2",
-        "bx1", "by1", "bx2", "by2",
-        F.explode("_strips").alias("_strip"),
-    )
-    px = F.col(lon_col)
-    py = F.col(lat_col)
-    pts = df.select(
-        F.col(id_col),
-        px.alias("_px"),
-        py.alias("_py"),
-        F.shiftright(px + F.lit(LON_OFFSET), strip_shift).alias(
-            "_strip"
-        ),
-    )
-    pairs = pts.join(e, "_strip").where(
-        (F.col("_px") >= F.col("bx1"))
-        & (F.col("_px") <= F.col("bx2"))
-        & (F.col("_py") >= F.col("by1"))
-        & (F.col("_py") <= F.col("by2"))
-    )
-    n1 = F.col("y1") > F.col("_py")
-    n2 = F.col("y2") > F.col("_py")
-    south = (F.col("_py") - F.col("y1")) * (
-        F.col("x2") - F.col("x1")
-    ) < (F.col("_px") - F.col("x1")) * (F.col("y2") - F.col("y1"))
-    cross = (
-        (F.col("x1") <= F.col("_px"))
-        & (F.col("_px") < F.col("x2"))
-        & ((n1 & n2) | ((n1 != n2) & south))
-    )
-    ins = (
-        pairs.groupBy(id_col, "poly_idx", "name", "admin")
-        .agg(
-            F.sum(F.when(cross, 1).otherwise(0)).alias("_c")
-        )
-        .where(F.col("_c") % 2 == 1)
-    )
-    out = ins.groupBy(id_col).agg(
-        F.min_by(
-            "name", F.struct(F.col("admin"), F.col("poly_idx"))
-        ).alias("region"),
-        F.min_by(
-            "name",
-            F.struct((-F.col("admin")).alias("na"), F.col("poly_idx")),
-        ).alias("_sub"),
-        (F.max("admin") > F.min("admin")).alias("_mixed"),
-    )
-    return out.select(
-        id_col,
-        "region",
-        F.when(F.col("_mixed"), F.col("_sub")).alias("subregion"),
-    )
 
 
 def hex_center_cols(
@@ -1168,9 +789,10 @@ def rasterize_polygons(
     two JVM-side sequence explodes (bounded by raster resolution,
     independent of any corpus); each candidate joins ONLY its own
     polygon's edges (poly_idx equi-join of the literal edge frame)
-    and the exact northward-ray parity runs as the same relational
-    SUM(pred) % 2 aggregate as assign_regions_partitioned — pure
-    Catalyst, no Python stage. Exactly-vertical edges are absent
+    and the exact northward-ray parity runs as a relational
+    SUM(pred) % 2 aggregate over the same per-edge predicate as the
+    numpy kernel (geo/pip.crossings) — pure Catalyst, no Python
+    stage. Exactly-vertical edges are absent
     from the crossing set by construction (they cannot satisfy the
     half-open x-window), so parity is unaffected."""
     edges, polys = polyset_frames(spark, polyset)

@@ -22,7 +22,6 @@ from .operators.knn import knn_broadcast, radius_pairs
 from .operators.merge import diff, subtract, union_dedup
 from .operators.spatial import (
     assign_regions,
-    assign_regions_rtree,
     filter_border,
     with_cell,
 )
@@ -311,17 +310,6 @@ def q03_assign_regions(spark, sf_dir):
     """G1/J5: flagship N-polygon assignment with admin tie-break."""
     pts = doc_points(spark, sf_dir)
     out = assign_regions(pts, fixture_polyset())
-    return out.select("doc_id", "region", "subregion")
-
-
-def q151_assign_rtree(spark, sf_dir):
-    """G1/J5 via the broadcast STR-packed polygon R-tree
-    (geo/rtree.py, spatial.assign_regions_rtree): same assignment
-    semantics and oracle as q03, different candidate-discovery
-    physics — O(log P) MBR descent instead of the O(P) bbox sweep,
-    the scale path for thousands-of-polygons boundary sets."""
-    pts = doc_points(spark, sf_dir)
-    out = assign_regions_rtree(pts, fixture_polyset(), cap=4)
     return out.select("doc_id", "region", "subregion")
 
 
@@ -735,8 +723,8 @@ def q146_region_raster(spark, sf_dir):
     is inside each admin polygon — the region-mask primitive
     (filled-area counterpart of the way supercover). Candidate
     cells enumerate from the polygon bbox, bounded by raster
-    resolution, corpus-independent; parity is the same relational
-    ray cast as q127."""
+    resolution, corpus-independent; parity is a relational
+    crossing-count aggregate over the edge frame."""
     from .operators.spatial import rasterize_polygons
 
     return rasterize_polygons(spark, fixture_polyset(), shift=20)
@@ -2024,24 +2012,6 @@ def q126_asof_enrich(spark, sf_dir):
     return out.select("event_id", "user_id", "version_day")
 
 
-def q127_assign_partitioned(spark, sf_dir):
-    """G1/J5 without the broadcast
-    (spatial.assign_regions_partitioned): the polygon side as
-    DATA — a lon-strip shuffle equi-join pairs points with
-    strip-local edges and the exact ray cast runs as a relational
-    crossing-parity aggregate, admin tie-break as min_by. Same
-    oracle as q03; this is the physical plan that survives a
-    polygon side too big for any driver-built index."""
-    from .operators.spatial import (
-        assign_regions_partitioned,
-        polyset_frames,
-    )
-
-    pts = doc_points(spark, sf_dir)
-    edges, polys = polyset_frames(spark, fixture_polyset())
-    return assign_regions_partitioned(pts, edges, polys)
-
-
 def q78_sessionize(spark, sf_dir):
     """Event sessionization (operators/events.sessionize):
     gaps-and-islands with a 30-minute inactivity gap over the
@@ -2987,24 +2957,6 @@ SELECT doc_id, lang, fluency_milli,
        ] AS bucket
 FROM f
 """
-
-
-def q103_cover_assign(spark, sf_dir):
-    """q03's N-polygon assignment routed through the decided-cell
-    cover (geo/cover.py + operators/spatial.assign_regions_cover) —
-    the S2-style two-stage spatial join. A driver-built broadcast
-    grid classifies every cell as boundary vs decided; decided
-    cells carry a precomputed constant assignment (two shifts + an
-    array load per point), and only the ~perimeter/area boundary
-    fraction runs the exact ray-cast kernel. Output is EXACTLY
-    q03 — same oracle; the cover is pure work elision, never an
-    approximation (boundary marking is a proven superset, see the
-    module docstring)."""
-    from .operators.spatial import assign_regions_cover
-
-    pts = doc_points(spark, sf_dir)
-    out = assign_regions_cover(pts, fixture_polyset())
-    return out.select("doc_id", "region", "subregion")
 
 
 def q104_city_knn(spark, sf_dir):
@@ -6179,7 +6131,6 @@ QUERIES = {
     "q01_bbox_filter": q01_bbox_filter,
     "q02_pip_border": q02_pip_border,
     "q03_assign_regions": q03_assign_regions,
-    "q151_assign_rtree": q151_assign_rtree,
     "q04_cell_tiles": q04_cell_tiles,
     "q129_hex_heatmap": q129_hex_heatmap,
     "q134_geohash": q134_geohash,
@@ -6226,7 +6177,6 @@ QUERIES = {
     "q124_spatial_shards": q124_spatial_shards,
     "q125_transitions": q125_transitions,
     "q126_asof_enrich": q126_asof_enrich,
-    "q127_assign_partitioned": q127_assign_partitioned,
     "q79_bloom_seen": q79_bloom_seen,
     "q80_lm_fluency": q80_lm_fluency,
     "q81_classifier_gate": q81_classifier_gate,
@@ -6253,7 +6203,6 @@ QUERIES = {
     "q116_hilbert_bbox": q116_hilbert_bbox,
     "q101_heavy_hitters": q101_heavy_hitters,
     "q102_ppl_buckets": q102_ppl_buckets,
-    "q103_cover_assign": q103_cover_assign,
     "q104_city_knn": q104_city_knn,
     "q105_quantile_sketch": q105_quantile_sketch,
     "q92_hll_summary": q92_hll_summary,
@@ -7188,10 +7137,8 @@ WHERE lon_i >= 110000000 AND lon_i <= 125000000
 """,
         "q02_pip_border": pip_oracle_sql(),
         "q03_assign_regions": assign_oracle_sql(),
-        "q151_assign_rtree": assign_oracle_sql(),
         # same semantics, different physical plan (no broadcast):
         # the oracle is intentionally shared with q03
-        "q127_assign_partitioned": assign_oracle_sql(),
         "q04_cell_tiles": f"""
 WITH {_PTS_CTE}
 SELECT ((lat_i + {LAT_OFFSET}) >> {shift}) * {1 << lon_bits}
@@ -7372,7 +7319,6 @@ FROM w, z
         "q102_ppl_buckets": _Q102_ORACLE,
         # the cover is work elision, not new semantics: same oracle
         # as the plain assignment
-        "q103_cover_assign": assign_oracle_sql(),
         "q104_city_knn": f"""
 WITH {_PTS_CTE},
 cities(neighbor, clat, clon) AS (VALUES {cities}),

@@ -11,11 +11,18 @@ Two paths, mirroring how Parquet sinks behave:
   the manifest collect is one tiny row per part, not data.
 
 - write_wire_single: one complete, globally id-ordered file. Also
-  parallel: body chunks are encoded on the EXECUTORS (o5m resets
-  state at 0xff, PBF blobs are independent, XML objects are
-  self-contained, so per-range chunks concatenate byte-identically
-  to a serial render); the driver only streams header + chunks +
-  footer, so its memory is O(1 chunk) and its CPU is I/O-bound.
+  parallel: body chunks are encoded on the EXECUTORS and the driver
+  only streams header + chunks + footer, so its memory is O(1
+  chunk) and its CPU is I/O-bound. Concatenation is format-legal
+  for every format (o5m resets state at 0xff, PBF blobs are
+  independent, XML objects are self-contained), but only XML
+  chunks concatenate byte-identically to a serial render. o5m and
+  PBF decode to the same objects, while their bytes depend on
+  where the chunks break: each chunk opens with an o5m reset or a
+  new PBF blob. repartitionByRange's sampler picks those
+  boundaries, and once a partition holds more rows than its
+  reservoir they vary with the session's history (the sample is
+  seeded with the RDD id).
 
 Both paths range-partition each kind on its own and then encode all
 three kinds in ONE action: the union of the kinds' sorted range
@@ -114,8 +121,10 @@ def _writer(encode, name: str, columns: dict[str, list[str]]):
 def _write_kinds(frames, parts: int, encode, name: str) -> list[dict]:
     """Encode each kind's frame in `parts` id ranges and collect the
     manifest rows of all kinds in ONE action. Each kind keeps its own
-    repartitionByRange, so chunk boundaries (and the bytes) do not
-    depend on the other kinds. The union of the kinds' sorted range
+    repartitionByRange, so its chunk boundaries do not depend on the
+    other kinds' rows; they still come from the range sampler, so
+    for o5m and PBF the bytes are not reproducible across sessions
+    (see the module docstring). The union of the kinds' sorted range
     partitions is coalesced to at most one task per core (a Python
     task has a fixed cost, ~0.25 CPU-s on a 4-core host even when it
     is empty); a coalesced task reads whole partitions one after
@@ -264,8 +273,10 @@ def write_wire_single(
     bottleneck is gone); the driver only streams header + chunks +
     footer into the output file. Chunk concatenation is format-
     legal: o5m resets state at 0xff (each chunk leads with one),
-    PBF blobs are independent, XML objects are self-contained (and
-    concatenate byte-identically to the serial render).
+    PBF blobs are independent, XML objects are self-contained. Only
+    XML is byte-identical to the serial render; o5m and PBF decode
+    to the same objects, but their bytes follow the sampled chunk
+    boundaries (see the module docstring).
 
     dialect (XML emulation variants) still uses the serial driver
     encoder — dialect files exist for byte-diff differentials on

@@ -42,10 +42,10 @@ def test_flagship_plan_shape(pages):
     assert "ReadSchema: struct<url:string,text:string>" in plan
     # the cheap prefilter reaches the parquet scan
     assert "StringContains(text,City)" in plan
-    # exactly ONE Python stage — the vectorized PIP kernel (the
-    # inlined-Catalyst PIP variant measured >10x slower: codegen
-    # blowup + deterministic filter pushdown duplicating the chain;
-    # see spatial.JVM_EDGE_LIMIT)
+    # exactly ONE Python stage — the vectorized PIP kernel (PIP
+    # inlined as Catalyst expressions measured >10x slower on 4M
+    # pages: codegen blowup + deterministic filter pushdown
+    # duplicating the chain; BASELINE.md)
     assert plan.count("ArrowEvalPython (") == 1
     # zero shuffles: broadcast polygons, partition-local points
     assert "Exchange" not in plan
@@ -96,20 +96,10 @@ def test_assign_regions_no_shuffle(spark):
     from osmgraft.suite import doc_points
 
     pts = doc_points(spark, "/root/testdata/sf0.001")
-    # default (Arrow kernel) path: one python stage, no shuffle
+    # one python stage (the Arrow PIP kernel), no shuffle
     plan = _plan(spatial.assign_regions(pts, fixture_polyset()))
     assert "Exchange" not in plan
     assert plan.count("ArrowEvalPython") == 1
-
-    # opt-in JVM path: zero python stages, still no shuffle
-    old = spatial.JVM_EDGE_LIMIT
-    try:
-        spatial.JVM_EDGE_LIMIT = 10_000
-        plan = _plan(spatial.assign_regions(pts, fixture_polyset()))
-    finally:
-        spatial.JVM_EDGE_LIMIT = old
-    assert "Exchange" not in plan
-    assert "ArrowEvalPython" not in plan
 
 
 def test_union_dedup_single_shuffle(spark):

@@ -100,3 +100,28 @@ def test_k_core_matches_python_peel(spark):
     want = {v for e in cur for v in e}
     df = spark.createDataFrame(edges, "src string, dst string")
     assert {r.host for r in k_core(df, k=2).collect()} == want
+
+
+def test_k_core_cap_logs_warning(spark, caplog):
+    """A binding pass cap is reported on the `osmgraft` logger, the
+    same channel as the relation closures and cluster_star: a chain
+    peels one leaf from each end per pass, so one pass cannot
+    finish it; the default cap reaches the fixpoint silently."""
+    import logging
+
+    from osmgraft.operators.linkgraph import k_core
+
+    chain = [(f"v{i}", f"v{i + 1}") for i in range(6)]
+    df = spark.createDataFrame(chain, "src string, dst string")
+    with caplog.at_level(logging.WARNING, logger="osmgraft"):
+        capped = k_core(df, k=2, max_passes=1).count()
+    assert capped > 0  # the pass-capped superset, not the empty core
+    assert any(
+        "k_core stopped at 1 passes" in r.message
+        for r in caplog.records
+    )
+
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="osmgraft"):
+        assert k_core(df, k=2).count() == 0
+    assert not any("k_core" in r.message for r in caplog.records)

@@ -224,6 +224,13 @@ ITERATIVE_TRUNCATED = {
     # printout re-prints that scalar funnel per round per subtree
     # reference (1020 SinglePartition STRINGS for ~1 executed)
     "q142_density_clusters",
+    # q184's way chains also resolve through cluster_star: with
+    # localCheckpoint patched to identity each round's count runs
+    # on the whole un-checkpointed lineage of the rounds before it,
+    # and Catalyst's tree walks over it took 782 s of a 1021 s
+    # audit on a 4-core host, printing 13824 exchanges for the
+    # handful executed
+    "q184_way_chains",
     # q116's driver-planned Hilbert cover InSet: the expanded
     # printout duplicates the probe subtree per prefix and OOMs
     # the string builder — capture the checkpointed plan
