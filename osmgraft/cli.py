@@ -83,8 +83,11 @@ tests/test_cli_convert.py and tests/test_cli_flags.py."""
 from __future__ import annotations
 
 import sys
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from .session import job_description
 
 # --all-to-nodes pseudo-id offsets (global_otypeoffset10/20,
 # osmconvert.c:632-693): ways -> id + 1e15, relations -> id + 2e15
@@ -428,24 +431,49 @@ def _apply_spatial(nodes, ways, rels, opts, cached: list[DataFrame]):
     global_dropbrokenrefs, osmconvert.c:10427). The inside nodes are
     persisted (and put on `cached` for the caller to release), so
     the border test runs once per node although every keep stage
-    reads them."""
+    reads them. Like the reference's keep-hash per kind, the kept
+    way, node and relation ids are each decided once, as checkpointed
+    id frames that every later stage and the sink semi-join against."""
     spatial = opts["bbox"] is not None or opts["poly"] is not None
     hash_active = spatial or opts["drop_broken_refs"]
     if not hash_active:
         return nodes, ways, rels
     from .operators.graph import rel_closure_up
 
+    spark = nodes.sparkSession
+
+    def checkpoint(ids: DataFrame, what: str) -> DataFrame:
+        with job_description(spark, f"convert: kept {what} ids"):
+            return ids.localCheckpoint()
+
+    mref = rels.select("id", F.explode("members").alias("m")).select(
+        "id",
+        F.col("m.ref").alias("ref"),
+        F.col("m.mtype").alias("t"),
+        F.col("m.role").alias("role"),
+    )
     # inter-relation keep propagation (oo__rrprocessing,
     # osmconvert.c:9083-9131): a relation whose RELATION member is
     # kept becomes kept, to a fixpoint capped like maxrewind
-    rel_edges = (
-        rels.select(F.col("id").alias("rel_id"),
-                    F.explode("members").alias("m"))
-        .filter(F.col("m.mtype") == "relation")
-        .select("rel_id", F.col("m.ref").alias("child_rel"))
+    rel_edges = mref.filter(F.col("t") == "relation").select(
+        F.col("id").alias("rel_id"), F.col("ref").alias("child_rel")
     )
 
-    def keep_closure(direct: DataFrame) -> DataFrame:
+    def keep_closure(node_ids: DataFrame, way_ids: DataFrame):
+        # relations with a kept node or way member, then closed
+        # upward over relation members
+        direct = (
+            mref.filter(F.col("t") == "node")
+            .join(node_ids.select(F.col("id").alias("ref")),
+                  "ref", "left_semi")
+            .select("id")
+            .unionByName(
+                mref.filter(F.col("t") == "way")
+                .join(way_ids.select(F.col("id").alias("ref")),
+                      "ref", "left_semi")
+                .select("id")
+            )
+        )
         return rel_closure_up(
             rel_edges, direct.select(F.col("id").alias("rel_id"))
         ).select(F.col("rel_id").alias("id"))
@@ -455,12 +483,13 @@ def _apply_spatial(nodes, ways, rels, opts, cached: list[DataFrame]):
         inside = _inside_nodes(nodes, opts).persist()
         cached.append(inside)
 
-    wref = ways.select("id", F.explode("refs").alias("ref"))
-    kept_node_ids = inside.select(F.col("id").alias("ref"))
-    kept_way_ids = (
-        wref.join(kept_node_ids, "ref", "left_semi")
+    kept_way_ids = checkpoint(
+        ways.select("id", F.explode("refs").alias("ref"))
+        .join(inside.select(F.col("id").alias("ref")), "ref",
+              "left_semi")
         .select("id")
-        .distinct()
+        .distinct(),
+        "way",
     )
 
     complex_mode = (
@@ -473,28 +502,7 @@ def _apply_spatial(nodes, ways, rels, opts, cached: list[DataFrame]):
         # which have >= 1 flagged outer/inner member way pull their
         # UNFLAGGED outer/inner member ways back in; all kept ways
         # then complete their node sets (stage 12 = stage 21).
-        mref1 = rels.select(
-            "id", F.explode("members").alias("m")
-        ).select(
-            "id",
-            F.col("m.ref").alias("ref"),
-            F.col("m.mtype").alias("t"),
-            F.col("m.role").alias("role"),
-        )
-        direct1 = (
-            mref1.filter(F.col("t") == "node")
-            .join(inside.select(F.col("id").alias("ref")),
-                  "ref", "left_semi")
-            .select("id")
-            .unionByName(
-                mref1.filter(F.col("t") == "way")
-                .join(kept_way_ids.select(F.col("id").alias("ref")),
-                      "ref", "left_semi")
-                .select("id")
-            )
-            .distinct()
-        )
-        rel1 = keep_closure(direct1)
+        rel1 = keep_closure(inside, kept_way_ids)
         type_val = F.try_element_at(F.col("tags"), F.lit("type"))
         qual_type = F.lit(False)
         if opts["complete_mp"]:
@@ -504,82 +512,47 @@ def _apply_spatial(nodes, ways, rels, opts, cached: list[DataFrame]):
         qual_rels = rels.join(rel1, "id", "left_semi").filter(
             qual_type
         )
-        oi = mref1.filter(
+        oi = mref.filter(
             (F.col("t") == "way")
             & F.col("role").isin("outer", "inner")
         )
         # wayinside: >= 1 flagged outer/inner member way
-        with_inside_way = (
-            oi.join(
-                kept_way_ids.select(F.col("id").alias("ref")),
-                "ref",
-                "left_semi",
-            )
-            .select("id")
-            .distinct()
+        with_inside_way = oi.join(
+            kept_way_ids.select(F.col("id").alias("ref")),
+            "ref",
+            "left_semi",
+        ).select("id")
+        pulled_ways = oi.join(
+            qual_rels.select("id").join(
+                with_inside_way, "id", "left_semi"
+            ),
+            "id",
+            "left_semi",
+        ).select(F.col("ref").alias("id"))
+        kept_way_ids = checkpoint(
+            kept_way_ids.unionByName(pulled_ways).distinct(),
+            "completed way",
         )
-        pulled_ways = (
-            oi.join(
-                qual_rels.select("id").join(
-                    with_inside_way, "id", "left_semi"
-                ),
+    if complex_mode or (opts["complete_ways"] and spatial):
+        # G4: pull back every ref of a kept way that exists
+        pulled = ways.join(kept_way_ids, "id", "left_semi").select(
+            F.explode("refs").alias("id")
+        )
+        kept_node_ids = checkpoint(
+            nodes.join(
+                pulled.unionByName(inside.select("id")),
                 "id",
                 "left_semi",
-            )
-            .select(F.col("ref").alias("id"))
-            .distinct()
+            ).select("id"),
+            "node",
         )
-        kept_way_ids = (
-            kept_way_ids.unionByName(pulled_ways).distinct()
-        )
-        pulled_nodes = (
-            ways.join(kept_way_ids, "id", "left_semi")
-            .select(F.explode("refs").alias("id"))
-            .distinct()
-        )
-        nodes = nodes.join(
-            pulled_nodes.unionByName(inside.select("id")).distinct(),
-            "id",
-            "left_semi",
-        )
-        kept_node_ids = nodes.select(F.col("id").alias("ref"))
-    elif opts["complete_ways"] and spatial:
-        # G4: pull back every ref of a partially-inside way
-        pulled = (
-            ways.join(kept_way_ids, "id", "left_semi")
-            .select(F.explode("refs").alias("id"))
-            .distinct()
-        )
-        nodes = nodes.join(
-            pulled.unionByName(inside.select("id")).distinct(),
-            "id",
-            "left_semi",
-        )
-        kept_node_ids = nodes.select(F.col("id").alias("ref"))
+        nodes = nodes.join(kept_node_ids, "id", "left_semi")
     else:
         nodes = inside
+        kept_node_ids = inside.select("id")
 
     ways = ways.join(kept_way_ids, "id", "left_semi")
-
-    mref = rels.select("id", F.explode("members").alias("m")).select(
-        "id", F.col("m.ref").alias("ref"), F.col("m.mtype").alias("t")
-    )
-    direct = (
-        mref.filter(F.col("t") == "node")
-        .join(kept_node_ids, "ref", "left_semi")
-        .select("id")
-        .unionByName(
-            mref.filter(F.col("t") == "way")
-            .join(
-                kept_way_ids.select(F.col("id").alias("ref")),
-                "ref",
-                "left_semi",
-            )
-            .select("id")
-        )
-        .distinct()
-    )
-    kept_rel_ids = keep_closure(direct)
+    kept_rel_ids = keep_closure(kept_node_ids, kept_way_ids)
     rels = rels.join(kept_rel_ids, "id", "left_semi")
 
     if opts["drop_broken_refs"]:
@@ -1153,14 +1126,14 @@ def _stats_text(nodes, ways, rels) -> str:
 
 def _key_count_lines(
     frames: list[DataFrame], pattern: str, by_count: bool
-) -> list[str]:
+) -> Iterator[str]:
     """Tag-key (pattern == '') or tag-value (values of keys
     matching pattern, * wildcards at either end) frequency table.
     Names are grouped by their first 59 chars (count__nameL=60,
     osmfilter.c:1775); sort orders per count__qsortcount and the
-    name-ordered index. The count table is bounded (the reference
-    caps it at 1e6 entries), so the collect is small by
-    construction."""
+    name-ordered index, names comparing by their UTF-8 bytes (the
+    order of Spark's string sort). Spark sorts the table and the
+    lines stream to the driver one partition at a time."""
     ent_frames = [
         df.select(F.explode(F.map_entries("tags")).alias("e"))
         for df in frames
@@ -1190,14 +1163,10 @@ def _key_count_lines(
         named.select(F.substring("name", 1, 59).alias("name"))
         .groupBy("name")
         .agg(F.count("*").alias("cnt"))
-        .collect()
     )
-    rows = [(r["cnt"], r["name"]) for r in counts]
-    if by_count:
-        rows.sort(key=lambda t: (-t[0], t[1].encode("utf-8")))
-    else:
-        rows.sort(key=lambda t: t[1].encode("utf-8"))
-    return [f"{c:11d}\t{name}" for c, name in rows]
+    order = [F.col("cnt").desc(), "name"] if by_count else ["name"]
+    for r in counts.orderBy(*order).toLocalIterator():
+        yield f"{r['cnt']:11d}\t{r['name']}"
 
 
 # ----------------------------------------------------------------
@@ -1307,14 +1276,16 @@ def convert(spark: SparkSession, argv: list[str]) -> str | None:
     frame and the border's inside nodes are persisted while the
     conversion runs. Whether it returns or raises, convert then
     releases them and every other RDD persisted while it ran (the
-    relation loops' localCheckpoints), so it leaves no persisted
-    data behind; it assumes no other thread persists RDDs on the
-    same SparkContext meanwhile."""
+    keep sets' and the closure's localCheckpoints), so it leaves no
+    persisted data behind; it assumes no other thread persists RDDs
+    on the same SparkContext meanwhile. Each of its Spark jobs is
+    labelled `convert` or with the stage that ran it."""
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
     cached: list[DataFrame] = []
     try:
-        return _convert(spark, _parse_args(argv), cached)
+        with job_description(spark, "convert"):
+            return _convert(spark, _parse_args(argv), cached)
     finally:
         for df in cached:
             df.unpersist()
@@ -1781,50 +1752,47 @@ def _convert(
     out = opts["out"]
     if not out:
         raise SystemExit("missing -o= output (or --out-csv)")
-    from .wire import (
-        encode_o5m,
-        encode_osc,
-        write_wire_single,
-    )
+    from .wire import encode_o5m, encode_osc, write_wire_single
     from .wire.spark import _iter_rows
 
     ext = out.rsplit(".", 1)[-1]
-    if ext == "o5m":
-        write_wire_single(
-            nodes, ways, rels, out, fmt="o5m",
-            file_timestamp=opts["timestamp"],
-        )
-    elif ext == "o5c":
-        data = encode_o5m(
-            _iter_rows(nodes),
-            _iter_rows(ways) if ways is not None else [],
-            _iter_rows(rels) if rels is not None else [],
-            change=True,
-            file_timestamp=opts["timestamp"],
-        )
-        with open(out, "wb") as f:
-            f.write(data)
-    elif ext in ("osm", "osh"):
-        fmt = "osm"
-        if osh_mode:
-            fmt = "osh-fakell" if opts["fake_lonlat"] else "osh"
-        write_wire_single(
-            nodes, ways, rels, out, fmt=fmt,
-            dialect=opts["emulate"],
-            file_timestamp=opts["timestamp"],
-        )
-    elif ext == "osc":
-        with open(out, "w") as f:
-            f.write(
-                encode_osc(
-                    _iter_rows(nodes),
-                    _iter_rows(ways) if ways is not None else [],
-                    _iter_rows(rels) if rels is not None else [],
-                    fake_lonlat=opts["fake_lonlat"],
-                )
+    with job_description(spark, f"convert: write .{ext}"):
+        if ext == "o5m":
+            write_wire_single(
+                nodes, ways, rels, out, fmt="o5m",
+                file_timestamp=opts["timestamp"],
             )
-    elif ext == "pbf":
-        write_wire_single(nodes, ways, rels, out, fmt="pbf")
-    else:
-        raise SystemExit(f"unknown output extension .{ext}")
+        elif ext == "o5c":
+            data = encode_o5m(
+                _iter_rows(nodes),
+                _iter_rows(ways) if ways is not None else [],
+                _iter_rows(rels) if rels is not None else [],
+                change=True,
+                file_timestamp=opts["timestamp"],
+            )
+            with open(out, "wb") as f:
+                f.write(data)
+        elif ext in ("osm", "osh"):
+            fmt = "osm"
+            if osh_mode:
+                fmt = "osh-fakell" if opts["fake_lonlat"] else "osh"
+            write_wire_single(
+                nodes, ways, rels, out, fmt=fmt,
+                dialect=opts["emulate"],
+                file_timestamp=opts["timestamp"],
+            )
+        elif ext == "osc":
+            with open(out, "w") as f:
+                f.write(
+                    encode_osc(
+                        _iter_rows(nodes),
+                        _iter_rows(ways) if ways is not None else [],
+                        _iter_rows(rels) if rels is not None else [],
+                        fake_lonlat=opts["fake_lonlat"],
+                    )
+                )
+        elif ext == "pbf":
+            write_wire_single(nodes, ways, rels, out, fmt="pbf")
+        else:
+            raise SystemExit(f"unknown output extension .{ext}")
     return out

@@ -19,10 +19,10 @@ to the node table on the ref id — an equi join Catalyst plans as
 sort-merge (or broadcast when one side is small). Both the
 bbox-aggregate and the argmin re-join group on way_id, so with AQE
 the exchange introduced by the first groupBy is reused by the second
-join (same key). The iterative closure is a driver loop of
-broadcast-able semi-joins over a shrinking frontier with
-localCheckpoint to cut lineage — the Spark realization of the
-reference's <=12 tempfile rewinds.
+join (same key). The relation closure runs all its <=12 passes in
+one Python task over the rel->rel edges, as the reference rewinds
+its small rel->rel spool in memory; relation geometry is still a
+driver loop of lazy localCheckpoints, several jobs per pass.
 
 The synthetic ways/relations world is a pure integer function of
 doc_id (like suite.py's points), reproducible in DuckDB SQL —
@@ -33,7 +33,11 @@ from __future__ import annotations
 
 import logging
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
+
+from ..session import job_description
 
 _LOG = logging.getLogger("osmgraft")
 
@@ -429,7 +433,7 @@ def rel_geometry(
 
 
 # ---------------------------------------------------------------
-# R1: relation transitive closure (upward), <=12 fixed-point passes
+# R1/R2: relation transitive closure, <=12 passes in one task
 # ---------------------------------------------------------------
 
 
@@ -441,16 +445,10 @@ def rel_closure_up(
     fixed point or 12 passes, whichever first (the reference warns
     and stops at 12, osmconvert.c:10637-10643).
 
-    rels must have (rel_id, child_rel). Driver loop of exact
-    semi-joins over a shrinking frontier; localCheckpoint every pass
-    keeps the lineage flat (SURVEY.md hard-parts list).
-    """
-    edges = (
-        rels.select("rel_id", "child_rel")
-        .filter(F.col("child_rel").isNotNull())
-        .persist()
-    )
-    return _closure(edges, seed_rels, max_passes)
+    rels must have (rel_id, child_rel). Returns the seeds plus every
+    relation reached within max_passes (see _closure)."""
+    return _closure(rels.select("rel_id", "child_rel"), seed_rels,
+                    max_passes)
 
 
 def rel_closure_down(
@@ -458,60 +456,56 @@ def rel_closure_down(
 ) -> DataFrame:
     """R2 (oo__inverserrprocessing osmfilter.c:5130-5179): kept
     relations pull the relations they REFERENCE (downward), then
-    members and way-nodes are marked in later stages. Same loop as
+    members and way-nodes are marked in later stages. The closure of
     R1 with the edge direction flipped."""
-    edges = (
+    return _closure(
         rels.select(
             F.col("child_rel").alias("rel_id"),
             F.col("rel_id").alias("child_rel"),
-        )
-        .filter(F.col("rel_id").isNotNull())
-        .persist()
+        ),
+        seed_rels,
+        max_passes,
     )
-    return _closure(edges, seed_rels, max_passes)
 
 
 def _closure(
     edges: DataFrame, seed_rels: DataFrame, max_passes: int
 ) -> DataFrame:
-    edges.count()  # materialize once; every pass probes this cache
-    seed = seed_rels.select("rel_id").distinct().localCheckpoint()
-    frontiers = [seed]  # each entry is individually checkpointed
-    flagged = seed
-    frontier = seed
-    converged = False
-    for _ in range(max_passes):
-        # broadcast the (shrinking) frontier so the edge cache is
-        # probed map-side — no shuffle of the big side per pass.
-        # At cluster scale a too-large frontier falls back to a
-        # shuffled semi-join automatically (broadcast is a hint).
-        # The frontier is a LAZY localCheckpoint, so the count()
-        # both materializes the checkpoint and returns the emptiness
-        # test. That is still not one job per pass under AQE:
-        # building the checkpoint's RDD materializes the pass's
-        # query stages (2 jobs per keep-closure pass of a seeded
-        # PBF convert, 3 on a 6-deep chain) and the count runs 2
-        # more, 4-5 jobs per pass.
-        # `flagged` stays a lazy union of checkpointed frontiers —
-        # bounded depth (<= max_passes), no per-pass union job.
-        parents = edges.join(
-            F.broadcast(
-                frontier.select(F.col("rel_id").alias("child_rel"))
-            ),
-            "child_rel",
-            "left_semi",
-        ).select("rel_id")
-        frontier = (
-            parents.join(F.broadcast(flagged), "rel_id", "left_anti")
-            .distinct()
-            .localCheckpoint(eager=False)
+    """The seeds plus every rel_id reached from them through
+    (rel_id <- child_rel) edges in at most max_passes passes.
+
+    All passes run in one Python task: the rel->rel edges (what the
+    reference's rr_ spool holds) and the distinct seeds go through
+    repartition(1) into _passes, whose (rel_id, depth) output is
+    checkpointed once, so the Spark jobs do not grow with the depth.
+    Relations at depth == max_passes mean the cap bound with the
+    frontier still growing; their count is logged like the
+    reference's recursion warning. Null ids are dropped."""
+    rows = edges.filter(
+        F.col("rel_id").isNotNull() & F.col("child_rel").isNotNull()
+    ).withColumn("seed", F.lit(False)).unionByName(
+        seed_rels.select("rel_id")
+        .filter(F.col("rel_id").isNotNull())
+        .distinct()
+        .select("rel_id", F.col("rel_id").alias("child_rel"),
+                F.lit(True).alias("seed"))
+    )
+
+    def run(batches):
+        frames = list(batches)
+        if frames:
+            yield _passes(pd.concat(frames), max_passes)
+
+    spark = edges.sparkSession
+    with job_description(spark, "relation closure: one-task passes"):
+        flagged = (
+            rows.repartition(1)
+            .mapInPandas(run, "rel_id long, depth int")
+            .localCheckpoint()
         )
-        if frontier.count() == 0:
-            converged = True
-            break
-        frontiers.append(frontier)
-        flagged = flagged.unionByName(frontier)
-    if not converged:
+    with job_description(spark, "relation closure: cap count"):
+        at_cap = flagged.filter(F.col("depth") == max_passes).count()
+    if at_cap:
         # the reference warns and stops at its recursion cap
         # (osmconvert.c:10637-10643); mirror that with the size of
         # the still-growing frontier so truncation is visible.
@@ -520,10 +514,28 @@ def _closure(
             "relations still on the frontier; result is truncated "
             "at that depth",
             max_passes,
-            frontiers[-1].count(),
+            at_cap,
         )
-    edges.unpersist()
-    out = frontiers[0]
-    for f in frontiers[1:]:
-        out = out.unionByName(f)
-    return out
+    return flagged.select("rel_id")
+
+
+def _passes(rows: pd.DataFrame, max_passes: int) -> pd.DataFrame:
+    """The reference's rewinds of the rr_ spool over `rows` (edges,
+    and seeds marked `seed`): each pass flags the parents of the last
+    pass's newly flagged ids. Returns (rel_id, depth) of the seeds
+    (depth 0) and of every id flagged by pass 1..max_passes."""
+    seed = rows["seed"].to_numpy(bool)
+    parent, child = rows["rel_id"].to_numpy(), rows["child_rel"].to_numpy()
+    flagged = frontier = np.unique(parent[seed])
+    parent, child = parent[~seed], child[~seed]
+    ids, depth = [frontier], [np.zeros(len(frontier), np.int32)]
+    for d in range(1, max_passes + 1):
+        frontier = np.setdiff1d(parent[np.isin(child, frontier)], flagged)
+        if not len(frontier):
+            break
+        flagged = np.union1d(flagged, frontier)
+        ids.append(frontier)
+        depth.append(np.full(len(frontier), d, np.int32))
+    return pd.DataFrame(
+        {"rel_id": np.concatenate(ids), "depth": np.concatenate(depth)}
+    )

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import site
+from contextlib import contextmanager
 from importlib.machinery import PathFinder
 
 from pyspark.sql import SparkSession
@@ -61,6 +62,10 @@ def get_spark(
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # the default 100-entry codegen cache (segmented, so it evicts
+        # sooner) cannot hold the ~100 classes of one border convert,
+        # and the next convert recompiled 51-78 of them
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # InferFiltersFromGenerate clones the generator's CHILD
         # EXPRESSION into a Filter below the Generate. For a scan
         # column that enables pushdown, but for computed arrays
@@ -82,3 +87,16 @@ def get_spark(
     for k, v in {**_worker_daemon(), **(extra or {})}.items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Label the Spark jobs this thread starts inside the block, AQE's
+    query-stage jobs included; the previous label is restored."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)

@@ -8209,7 +8209,7 @@ est AS (
 SELECT e.a AS doc_id, p.v, e.num, e.den, e.n_neighbors
 FROM est e JOIN pv p ON p.doc_id = e.a
 """,
-        "q197_url_templates": """
+        "q197_url_templates": r"""
 WITH urls AS (
   SELECT 'https://host' || CAST(doc_id % 11 AS VARCHAR)
     || '.example.com/item/' || CAST(doc_id AS VARCHAR)
@@ -8947,7 +8947,7 @@ SELECT key AS event_type, n_days, sy,
   CAST(n_days * stt - st * st AS BIGINT) AS slope_den
 FROM sums
 """,
-        "q204_crawl_pipeline": """
+        "q204_crawl_pipeline": r"""
 WITH urls AS (
   SELECT 'https://host' || CAST(doc_id % 11 AS VARCHAR)
          || '.example.com/doc/' || CAST(doc_id AS VARCHAR) AS url

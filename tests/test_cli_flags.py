@@ -364,6 +364,48 @@ def test_out_key_after_keep_matches_osmfilter(spark, tmp_path,
     assert ours == want
 
 
+def test_out_key_and_count_sort_by_utf8_bytes(spark, tmp_path, capsys):
+    """--out-key/--out-count lines, sorted by Spark, equal a Python
+    table sorted by (count descending,) then the name's UTF-8 bytes,
+    with names cut to 59 characters. The names include characters
+    whose UTF-16 order differs from their UTF-8 order."""
+    from collections import Counter
+    from xml.sax.saxutils import quoteattr
+
+    long = "n" * 58
+    names = ["b", "B", "a", "\u00e9", "\u00df", "\uff01", "\U0001f600",
+             long + "x1", long + "x2", long + "y"]
+    tags = [(k, v) for i, k in enumerate(names)
+            for v in names[: 1 + i % 4]]
+    lines = ['<?xml version="1.0" encoding="UTF-8"?>', '<osm version="0.6">']
+    for i, (k, v) in enumerate(tags):
+        lines.append(
+            f'<node id="{i + 1}" lat="1.0" lon="2.0" version="1">'
+            f"<tag k={quoteattr(k)} v={quoteattr(v)}/></node>"
+        )
+    lines.append("</osm>")
+    osm = tmp_path / "u.osm"
+    osm.write_text("\n".join(lines), encoding="utf-8")
+
+    def table(names, by_count):
+        rows = [(c, n) for n, c in Counter(x[:59] for x in names).items()]
+        if by_count:
+            rows.sort(key=lambda t: (-t[0], t[1].encode("utf-8")))
+        else:
+            rows.sort(key=lambda t: t[1].encode("utf-8"))
+        return "".join(f"{c:11d}\t{n}\n" for c, n in rows)
+
+    keys = [k for k, _ in tags]
+    for args, want in (
+        (["--out-key"], table(keys, False)),
+        (["--out-count"], table(keys, True)),
+        ([f"--out-count={long}*"],
+         table([v for k, v in tags if k.startswith(long)], True)),
+    ):
+        convert(spark, [str(osm), *args])
+        assert capsys.readouterr().out == want, args
+
+
 @needs_refbin
 def test_keep_tags_matches_osmfilter(spark, tmp_path):
     osm = _world(tmp_path)

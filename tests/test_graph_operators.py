@@ -3,7 +3,10 @@ exact C center semantics, clipping decisions, closure depth."""
 
 from __future__ import annotations
 
+import logging
+
 import pytest
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from osmgraft.operators.graph import (
@@ -208,3 +211,121 @@ def test_rel_closure_warns_at_cap(spark, caplog):
         n = out.count()
     assert n == 16
     assert not caplog.records
+
+
+# ---------------------------------------------------------------
+# the one-task closure against a plain-Python pass loop
+# ---------------------------------------------------------------
+
+
+def _py_closure(edges, seeds, max_passes, up=True):
+    """The reference's pass loop: each pass flags the parents (up) or
+    children (down) of the last pass's newly flagged relations.
+    Returns (flagged ids, size of the frontier at the cap or None
+    when the loop converged first)."""
+    step = (lambda p, c: (c, p)) if up else (lambda p, c: (p, c))
+    pairs = [step(p, c) for p, c in edges]
+    flagged = set(seeds)
+    frontier = set(seeds)
+    for _ in range(max_passes):
+        frontier = {b for a, b in pairs if a in frontier} - flagged
+        if not frontier:
+            return flagged, None
+        flagged |= frontier
+    return flagged, len(frontier)
+
+
+class _Records(logging.Handler):
+    def __init__(self):
+        super().__init__(logging.WARNING)
+        self.messages: list[str] = []
+
+    def emit(self, record):
+        self.messages.append(record.getMessage())
+
+
+def _cap_warnings(fn):
+    """Run fn, return (its result, the closure-cap warnings logged)."""
+    h = _Records()
+    log = logging.getLogger("osmgraft")
+    log.addHandler(h)
+    try:
+        out = fn()
+    finally:
+        log.removeHandler(h)
+    return out, [m for m in h.messages if "relation closure" in m]
+
+
+# ids include negatives and values beyond 2^53 (exact int64 handling)
+_IDS = st.sampled_from([-7, 0, 1, 2, 3, 4, 5, 6, 2**60 + 1, 2**60 + 2])
+_GRAPHS = st.tuples(
+    # random edges: cycles, self-loops and duplicates come for free
+    st.lists(st.tuples(_IDS, _IDS), max_size=14),
+    # a chain 100 <- 101 <- ... that may be longer than the cap
+    st.integers(0, 7),
+    # seeds, some outside the graph
+    st.lists(st.one_of(_IDS, st.sampled_from([100, 999])), max_size=5),
+    st.integers(1, 5),
+)
+
+
+def _edges(rand, chain):
+    return rand + [(100 + i + 1, 100 + i) for i in range(chain)]
+
+
+@settings(max_examples=300, deadline=None)
+@given(_GRAPHS, st.booleans())
+def test_passes_kernel_matches_python(graph, up):
+    """_passes (the task's numpy kernel) flags the same ids as the
+    pass loop, the seeds at depth 0, and the ids at depth == cap are
+    the cap frontier."""
+    import pandas as pd
+
+    from osmgraft.operators.graph import _passes
+
+    rand, chain, seeds, cap = graph
+    edges = _edges(rand, chain)
+    edges_in = edges if up else [(c, p) for p, c in edges]
+    rows = pd.DataFrame(
+        [(p, c, False) for p, c in edges_in] + [(s, s, True) for s in seeds],
+        columns=["rel_id", "child_rel", "seed"],
+    ).astype({"rel_id": "int64", "child_rel": "int64", "seed": bool})
+    out = _passes(rows, cap)
+    want, at_cap = _py_closure(edges, seeds, cap, up)
+    assert sorted(out.rel_id) == sorted(want)
+    assert sorted(out.rel_id[out.depth == 0]) == sorted(set(seeds))
+    assert int((out.depth == cap).sum()) == (at_cap or 0)
+
+
+@settings(max_examples=12, deadline=None)
+@example(([], 3, [100], 2), True)  # parent-only reach at the cap
+@example(([(5, 5), (5, 6), (6, 5)], 0, [5, 6], 1), True)  # no growth
+@example(([(1, 2), (1, 2)], 0, [2, 1], 1), True)  # parent-only seed
+@example(([], 7, [107], 5), False)  # chain longer than the cap, down
+@given(_GRAPHS, st.booleans())
+def test_closure_matches_python(spark, graph, up):
+    """rel_closure_up/down == the pass loop: same ids, and the cap
+    warning in the same cases with the same frontier count."""
+    from osmgraft.operators.graph import rel_closure_down
+
+    rand, chain, seeds, cap = graph
+    edges = _edges(rand, chain)
+    # relations without a relation member have child_rel NULL
+    lone = [(s, None) for s in seeds]
+    rels = spark.createDataFrame(edges + lone,
+                                 "rel_id long, child_rel long")
+    seed_df = spark.createDataFrame([(s,) for s in seeds],
+                                    "rel_id long")
+    closure = rel_closure_up if up else rel_closure_down
+    got, warned = _cap_warnings(
+        lambda: sorted(
+            r.rel_id for r in closure(rels, seed_df, cap).collect()
+        )
+    )
+    want, at_cap = _py_closure(edges, seeds, cap, up)
+    assert got == sorted(want)
+    if at_cap is None:
+        assert warned == []
+    else:
+        assert len(warned) == 1
+        assert f"with {at_cap} relations still" in warned[0]

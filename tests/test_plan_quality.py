@@ -553,3 +553,99 @@ def test_wire_single_encodes_all_kinds_in_one_collect(
     # the decode reads the cache: the only Python stage is the encode
     assert names.count("MapInPandas") == 1, names
     assert names.count("InMemoryTableScan") == 3, names
+
+
+# ---------------------------------------------------------------
+# job and compile budgets of a border convert
+# ---------------------------------------------------------------
+
+
+def _jobs_of(spark, fn) -> tuple[list, int]:
+    """Run fn; return the (job id, description or None) of every job
+    the status store recorded meanwhile, and the number of classes
+    whole-stage codegen compiled."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    bus = sc._jsc.sc().listenerBus()
+    metric = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def newest() -> int:
+        bus.waitUntilEmpty()
+        jobs = store.jobsList(None)
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    first, compiled = newest(), metric.getCount()
+    fn()
+    last = newest()
+    compiled = metric.getCount() - compiled
+    jobs = store.jobsList(None)
+    out = []
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if first < j.jobId() <= last:
+            d = j.description()
+            out.append((j.jobId(), d.get() if d.isDefined() else None))
+    return out, compiled
+
+
+@pytest.fixture(scope="module")
+def border_converts(spark, tmp_path_factory):
+    """Two identical `-B --complete-ways` converts of the test world
+    in one session: [(jobs, compiled classes)] per convert."""
+    from osmgraft.cli import convert
+
+    from .test_o5m_source import _world_xml
+
+    d = tmp_path_factory.mktemp("convert")
+    (d / "w.osm").write_text(_world_xml())
+    (d / "b.poly").write_text(
+        "b\n1\n -0.2 0\n 0.1 0\n 0.1 0.6\n -0.2 0.6\nEND\nEND\n"
+    )
+    args = [str(d / "w.osm"), f"-B={d / 'b.poly'}", "--complete-ways",
+            f"-o={d / 'out.o5m'}"]
+    return [_jobs_of(spark, lambda: convert(spark, args))
+            for _ in range(2)]
+
+
+def test_border_convert_job_budget(border_converts):
+    """Each keep set is decided once and the relation closure runs in
+    one task: a seeded border convert stays within 26 Spark jobs (49
+    when the keep sets were re-derived per stage and the closure ran
+    a driver loop)."""
+    for jobs, _ in border_converts:
+        assert len(jobs) <= 26, jobs
+
+
+def test_convert_jobs_are_described(border_converts):
+    """Every job a convert runs carries a job description."""
+    for jobs, _ in border_converts:
+        assert jobs
+        assert [j for j in jobs if not j[1]] == [], jobs
+
+
+def test_second_convert_reuses_compiled_code(border_converts):
+    """With the codegen cache sized by get_spark, a repeated convert
+    finds its generated classes compiled (51-78 recompiles with
+    Spark's default 100-entry cache)."""
+    _, compiled = border_converts[1]
+    assert compiled <= 10
+
+
+def test_closure_jobs_do_not_grow_with_depth(spark):
+    """The closure runs the same Spark jobs on a 1-deep and a 12-deep
+    chain: the passes run inside one task."""
+    from osmgraft.operators.graph import rel_closure_up
+
+    def chain_jobs(depth: int) -> int:
+        rels = spark.createDataFrame(
+            [(i, i - 1 if i > 0 else None) for i in range(depth + 1)],
+            "rel_id long, child_rel long",
+        )
+        seeds = spark.createDataFrame([(0,)], "rel_id long")
+        jobs, _ = _jobs_of(
+            spark, lambda: rel_closure_up(rels, seeds).collect()
+        )
+        return len(jobs)
+
+    assert chain_jobs(1) == chain_jobs(12)

@@ -186,6 +186,18 @@ EXPECTED_ONEPART = {
         " (max doc length / bucket_chars rows — the q105/q186"
         " pattern; the corpus never enters the funnel)",
     ),
+    "q27_rel_closure": (
+        1,
+        "the relation closure's one task: the rel->rel edges (the"
+        " reference's rr_ spool) and the distinct seeds, a subset of"
+        " the relations, meet in one partition for all its passes",
+    ),
+    "q38_rel_closure_down": (
+        2,
+        "q27's one-task closure, downward; the kept relations feed"
+        " both the node and the way members, so the un-checkpointed"
+        " printout shows the closure twice (it runs once)",
+    ),
     "q173_power_iteration": (
         7,
         "per-iteration scalar max|y| and renormalizer over the"
