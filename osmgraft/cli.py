@@ -85,7 +85,9 @@ from __future__ import annotations
 import sys
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import (
+    DataFrame, Observation, SparkSession, functions as F,
+)
 
 from .session import job_description
 
@@ -425,26 +427,37 @@ def _inside_nodes(nodes: DataFrame, opts: dict) -> DataFrame:
 
 
 def _apply_spatial(nodes, ways, rels, opts, cached: list[DataFrame]):
-    """Border / ref-graph stage. Returns the kept (nodes, ways,
-    rels). --drop-broken-refs alone activates the keep-hash exactly
-    like the reference (hashactive = border_active ||
+    """Border / ref-graph stage. Returns the kept (nodes, ways, rels)
+    and upper bounds on their row counts for the sink (None where
+    unknown, or for all three without a keep set).
+    --drop-broken-refs alone activates the keep-hash exactly like
+    the reference (hashactive = border_active ||
     global_dropbrokenrefs, osmconvert.c:10427). The inside nodes are
     persisted (and put on `cached` for the caller to release), so
     the border test runs once per node although every keep stage
     reads them. Like the reference's keep-hash per kind, the kept
     way, node and relation ids are each decided once, as checkpointed
-    id frames that every later stage and the sink semi-join against."""
+    id frames that every later stage and the sink semi-join against.
+    Their row counts are observed while they are checkpointed, with
+    no job of their own; a kind's output rows are its kept ids
+    semi-joined, so with unique input ids the counts bound them."""
     spatial = opts["bbox"] is not None or opts["poly"] is not None
     hash_active = spatial or opts["drop_broken_refs"]
     if not hash_active:
-        return nodes, ways, rels
+        return nodes, ways, rels, None
     from .operators.graph import rel_closure_up
 
     spark = nodes.sparkSession
+    counted: dict[str, int] = {}
 
     def checkpoint(ids: DataFrame, what: str) -> DataFrame:
+        obs = Observation()
         with job_description(spark, f"convert: kept {what} ids"):
-            return ids.localCheckpoint()
+            ids = ids.observe(obs, F.count(F.lit(1)).alias("rows")) \
+                .localCheckpoint()
+        # keyed by kind: the completed way ids replace the way ids
+        counted[what.split()[-1]] = obs.get["rows"]
+        return ids
 
     mref = rels.select("id", F.explode("members").alias("m")).select(
         "id",
@@ -474,9 +487,13 @@ def _apply_spatial(nodes, ways, rels, opts, cached: list[DataFrame]):
                 .select("id")
             )
         )
-        return rel_closure_up(
-            rel_edges, direct.select(F.col("id").alias("rel_id"))
-        ).select(F.col("rel_id").alias("id"))
+        obs = Observation()
+        kept = rel_closure_up(
+            rel_edges, direct.select(F.col("id").alias("rel_id")),
+            observation=obs,
+        )
+        counted["rel"] = obs.get["rows"]
+        return kept.select(F.col("rel_id").alias("id"))
 
     inside = nodes
     if spatial:
@@ -550,6 +567,7 @@ def _apply_spatial(nodes, ways, rels, opts, cached: list[DataFrame]):
     else:
         nodes = inside
         kept_node_ids = inside.select("id")
+        counted["node"] = None
 
     ways = ways.join(kept_way_ids, "id", "left_semi")
     kept_rel_ids = keep_closure(kept_node_ids, kept_way_ids)
@@ -559,7 +577,9 @@ def _apply_spatial(nodes, ways, rels, opts, cached: list[DataFrame]):
         nodes, ways, rels = _drop_broken(
             nodes, ways, rels, kept_way_ids, kept_rel_ids
         )
-    return nodes, ways, rels
+    return nodes, ways, rels, (
+        counted["node"], counted["way"], counted["rel"]
+    )
 
 
 def _drop_broken(nodes, ways, rels, kept_way_ids, kept_rel_ids):
@@ -1650,9 +1670,12 @@ def _convert(
         if opts["out_none"] and opts["out"] is None:
             return None
 
-    nodes, ways, rels = _apply_spatial(nodes, ways, rels, opts, cached)
+    nodes, ways, rels, bounds = _apply_spatial(
+        nodes, ways, rels, opts, cached
+    )
 
     if opts["all_to_nodes"]:
+        bounds = None  # ways and relations become nodes
         if opts["add_bbox"]:
             nodes, ways, rels = _all_to_nodes_bbox(
                 nodes, ways, rels, opts["add_bbox"],
@@ -1686,6 +1709,7 @@ def _convert(
 
     if tombs is not None:
         # rejoin the delete records for the change/osh sinks
+        bounds = None
         nodes = nodes.unionByName(tombs[0])
         ways = ways.unionByName(tombs[1]) if ways is not None else tombs[1]
         rels = rels.unionByName(tombs[2]) if rels is not None else tombs[2]
@@ -1760,7 +1784,7 @@ def _convert(
         if ext == "o5m":
             write_wire_single(
                 nodes, ways, rels, out, fmt="o5m",
-                file_timestamp=opts["timestamp"],
+                file_timestamp=opts["timestamp"], rows=bounds,
             )
         elif ext == "o5c":
             data = encode_o5m(
@@ -1779,7 +1803,7 @@ def _convert(
             write_wire_single(
                 nodes, ways, rels, out, fmt=fmt,
                 dialect=opts["emulate"],
-                file_timestamp=opts["timestamp"],
+                file_timestamp=opts["timestamp"], rows=bounds,
             )
         elif ext == "osc":
             with open(out, "w") as f:
@@ -1792,7 +1816,9 @@ def _convert(
                     )
                 )
         elif ext == "pbf":
-            write_wire_single(nodes, ways, rels, out, fmt="pbf")
+            write_wire_single(
+                nodes, ways, rels, out, fmt="pbf", rows=bounds
+            )
         else:
             raise SystemExit(f"unknown output extension .{ext}")
     return out

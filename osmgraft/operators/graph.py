@@ -35,7 +35,7 @@ import logging
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from ..session import job_description
 
@@ -438,7 +438,10 @@ def rel_geometry(
 
 
 def rel_closure_up(
-    rels: DataFrame, seed_rels: DataFrame, max_passes: int = 12
+    rels: DataFrame,
+    seed_rels: DataFrame,
+    max_passes: int = 12,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """R1 (oo__rrprocessing osmconvert.c:9083-9132): a relation is
     flagged if any member relation is flagged; iterate until the
@@ -446,9 +449,10 @@ def rel_closure_up(
     and stops at 12, osmconvert.c:10637-10643).
 
     rels must have (rel_id, child_rel). Returns the seeds plus every
-    relation reached within max_passes (see _closure)."""
+    relation reached within max_passes (see _closure); `observation`,
+    when given, receives the result's row count as `rows`."""
     return _closure(rels.select("rel_id", "child_rel"), seed_rels,
-                    max_passes)
+                    max_passes, observation)
 
 
 def rel_closure_down(
@@ -469,7 +473,10 @@ def rel_closure_down(
 
 
 def _closure(
-    edges: DataFrame, seed_rels: DataFrame, max_passes: int
+    edges: DataFrame,
+    seed_rels: DataFrame,
+    max_passes: int,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """The seeds plus every rel_id reached from them through
     (rel_id <- child_rel) edges in at most max_passes passes.
@@ -479,8 +486,11 @@ def _closure(
     repartition(1) into _passes, whose (rel_id, depth) output is
     checkpointed once, so the Spark jobs do not grow with the depth.
     Relations at depth == max_passes mean the cap bound with the
-    frontier still growing; their count is logged like the
-    reference's recursion warning. Null ids are dropped."""
+    frontier still growing; their count, observed while the
+    checkpoint is written (no job of its own), is logged like the
+    reference's recursion warning. `observation` (a fresh one when
+    None) receives that count as `at_cap` and the result's row count
+    as `rows`. Null ids are dropped."""
     rows = edges.filter(
         F.col("rel_id").isNotNull() & F.col("child_rel").isNotNull()
     ).withColumn("seed", F.lit(False)).unionByName(
@@ -497,14 +507,19 @@ def _closure(
             yield _passes(pd.concat(frames), max_passes)
 
     spark = edges.sparkSession
+    obs = observation or Observation()
     with job_description(spark, "relation closure: one-task passes"):
         flagged = (
             rows.repartition(1)
             .mapInPandas(run, "rel_id long, depth int")
+            .observe(
+                obs,
+                F.count_if(F.col("depth") == max_passes).alias("at_cap"),
+                F.count(F.lit(1)).alias("rows"),
+            )
             .localCheckpoint()
         )
-    with job_description(spark, "relation closure: cap count"):
-        at_cap = flagged.filter(F.col("depth") == max_passes).count()
+    at_cap = obs.get["at_cap"]
     if at_cap:
         # the reference warns and stops at its recursion cap
         # (osmconvert.c:10637-10643); mirror that with the size of

@@ -2,33 +2,40 @@
 
 Two paths, mirroring how Parquet sinks behave:
 
-- write_wire_dir: the scale path. Each type's DataFrame is
-  range-partitioned on id and sorted within partitions, then every
-  partition encodes ONE standalone wire file (executor-side, no
-  driver traffic) — the distributed analogue of Parquet part files.
-  All three readers (and osmconvert itself) accept a directory of
-  such parts. Returns the collected manifest (path, rows per part);
-  the manifest collect is one tiny row per part, not data.
+- write_wire_dir: the scale path. Each type's rows are cut into id
+  chunks, sorted by id, and every chunk encodes ONE standalone wire
+  file (executor-side, no driver traffic) — the distributed analogue
+  of Parquet part files. All three readers (and osmconvert itself)
+  accept a directory of such parts. Returns the collected manifest
+  (path, rows per part); the manifest collect is one tiny row per
+  part, not data.
 
 - write_wire_single: one complete, globally id-ordered file. Also
   parallel: body chunks are encoded on the EXECUTORS and the driver
   only streams header + chunks + footer, so its memory is O(1
   chunk) and its CPU is I/O-bound. Concatenation is format-legal
   for every format (o5m resets state at 0xff, PBF blobs are
-  independent, XML objects are self-contained), but only XML
-  chunks concatenate byte-identically to a serial render. o5m and
-  PBF decode to the same objects, while their bytes depend on
-  where the chunks break: each chunk opens with an o5m reset or a
-  new PBF blob. repartitionByRange's sampler picks those
-  boundaries, and once a partition holds more rows than its
-  reservoir they vary with the session's history (the sample is
-  seeded with the RDD id).
+  independent, XML objects are self-contained). XML chunks
+  concatenate byte-identically to a serial render; o5m and PBF
+  bytes depend on where the chunks break, since each chunk opens
+  with an o5m reset or a new PBF blob.
 
-Both paths range-partition each kind on its own and then encode all
-three kinds in ONE action: the union of the kinds' sorted range
-partitions, coalesced to at most one task per core, feeds one
-Python encode stage, instead of three serial per-kind jobs of
-`parts` tasks each.
+Chunk boundaries are a pure function of the rows written, so the
+same rows give the same bytes whatever the session ran before, the
+input's partitioning or the number of cores. (Rows of one kind that
+share an id, such as versions in a history file, are sorted on id
+alone and keep no defined order among themselves.) A kind of n rows gets
+ceil(n / CHUNK_ROWS) chunks (or `parts`, when the caller asks for a
+number). A kind of one chunk is sorted and encoded in one task, with
+no shuffle and no statistic. Otherwise the boundaries come from an
+exact, order-independent statistic, the row count per id bucket
+(_bucket), and the rows shuffle on their computed chunk. The
+statistic costs one aggregate action, unless the caller's row
+bounds already show that every kind fits one chunk.
+
+Both paths encode all three kinds in ONE action: the union of the
+kinds' sorted chunks feeds one Python encode stage, instead of three
+serial per-kind jobs.
 """
 
 from __future__ import annotations
@@ -38,7 +45,7 @@ from collections.abc import Iterator
 from functools import partial, reduce
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .o5m import encode_o5m
 from .osmxml import encode_osm_xml
@@ -84,14 +91,87 @@ def _rows(pdf: pd.DataFrame) -> list[dict]:
     return recs
 
 
+# rows per chunk of one kind: a chunk is one Python encode task and
+# one o5m reset or run of PBF blobs (4 blocks of encode_pbf_body's
+# 8000 objects), so the chunks of a kind depend on its rows alone
+CHUNK_ROWS = 32_000
+# significant bits of an id that name its bucket in the statistic:
+# ids below 2^12 are their own bucket, a larger id shares its bucket
+# with the 2^(bit length - 12) ids of the same leading bits
+_BUCKET_BITS = 12
+
+
+def _bucket(id_col: Column) -> Column:
+    """The id's statistic bucket, order-preserving and needing no
+    min/max: the id with all but its leading _BUCKET_BITS significant
+    bits cleared. A negative id is bucketed as its complement ~id
+    (>= 0) and complemented back, so negative buckets sort below the
+    others in id order. A null id falls in the lowest bucket."""
+    neg = id_col < 0
+    x = F.when(neg, F.bitwise_not(id_col)).otherwise(id_col)
+    shift = F.greatest(F.length(F.bin(x)) - _BUCKET_BITS, F.lit(0))
+    # the Python shift helpers take a constant shift; SQL's take a column
+    top = F.call_function(
+        "shiftleft", F.call_function("shiftright", x, shift), shift
+    )
+    return F.coalesce(
+        F.when(neg, F.bitwise_not(top)).otherwise(top),
+        F.lit(-(1 << 63)),
+    )
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+    )
+
+
+def _histograms(kinds) -> dict[str, list[tuple[int, int]]]:
+    """{kind: [(bucket, rows)] in bucket order} of the (kind, frame)
+    pairs, in one aggregate action. Row counts per bucket do not
+    depend on partitioning or row order."""
+    counts = _union([
+        df.select(F.lit(kind).alias("_kind"),
+                  _bucket(F.col("id")).alias("_b"))
+        for kind, df in kinds
+    ]).groupBy("_kind", "_b").count()
+    out: dict[str, list[tuple[int, int]]] = {}
+    for r in counts.collect():
+        out.setdefault(r["_kind"], []).append((r["_b"], r["count"]))
+    return {kind: sorted(h) for kind, h in out.items()}
+
+
+def _bounds(hist: list[tuple[int, int]], chunks: int) -> list[int]:
+    """The first bucket of each chunk after the first: bucket b goes
+    to chunk (rows in the buckets below b) * chunks // rows, so every
+    chunk holds about rows / chunks rows, plus what a bucket that
+    straddles a cut brings."""
+    n = sum(c for _, c in hist)
+    bounds, last, below = [], 0, 0
+    for b, c in hist:
+        part = below * chunks // n
+        if part > last:
+            bounds.append(b)
+            last = part
+        below += c
+    return bounds
+
+
+def _chunk_of(bucket: Column, bounds: list[int]) -> Column:
+    """Chunk ordinal of a row: the number of (ascending, non-empty)
+    bounds <= its bucket."""
+    out = F.when(bucket >= bounds[-1], len(bounds))
+    for i in range(len(bounds) - 1, 0, -1):
+        out = out.when(bucket >= bounds[i - 1], i)
+    return out.otherwise(0)
+
+
 def _writer(encode, name: str, columns: dict[str, list[str]]):
-    """mapInPandas body over the kinds' range partitions: each run
-    of rows with one (`_kind`, `_part`) is one chunk, encoded with
+    """mapInPandas body over the kinds' sorted chunks: each run of
+    rows with one (`_kind`, `_part`) is one chunk, encoded with
     encode(nodes, ways, rels) -> bytes from the kind's own `columns`,
     written to name.format(kind=, part=), and reported as one
-    manifest row. `_part` is the kind's own range-partition index,
-    carried in the data because TaskContext's partition id numbers
-    the partitions of all kinds together."""
+    manifest row. `_part` is the chunk's ordinal within its kind."""
 
     def write(kind: str, part: int, rows: list[dict]) -> pd.DataFrame:
         args = {"nodes": [], "ways": [], "rels": []}
@@ -118,51 +198,84 @@ def _writer(encode, name: str, columns: dict[str, list[str]]):
     return gen
 
 
-def _write_kinds(frames, parts: int, encode, name: str) -> list[dict]:
-    """Encode each kind's frame in `parts` id ranges and collect the
-    manifest rows of all kinds in ONE action. Each kind keeps its own
-    repartitionByRange, so its chunk boundaries do not depend on the
-    other kinds' rows; they still come from the range sampler, so
-    for o5m and PBF the bytes are not reproducible across sessions
-    (see the module docstring). The union of the kinds' sorted range
-    partitions is coalesced to at most one task per core (a Python
-    task has a fixed cost, ~0.25 CPU-s on a 4-core host even when it
-    is empty); a coalesced task reads whole partitions one after
-    another, so each chunk still reaches one task as one contiguous
-    run. Returns the manifest rows kind by kind, each kind in range
-    order."""
+def _write_kinds(
+    frames, parts: int | None, encode, name: str, rows=None
+) -> list[dict]:
+    """Encode each kind's frame in id chunks and collect the manifest
+    rows of all kinds in ONE action; returns them kind by kind, each
+    kind in id order.
+
+    A kind of n rows gets `parts` chunks, or ceil(n / CHUNK_ROWS)
+    when parts is None; the chunk boundaries depend only on the rows
+    (see the module docstring), never on the session's history or
+    the cores. `rows` may bound each kind's rows from above (None
+    where unknown), for example from counts observed on the keep sets
+    that the frames semi-join. With parts None, a kind bounded by 0
+    is empty and one bounded by CHUNK_ROWS is one chunk, so neither
+    needs the statistic. If a bounded one-chunk kind turns out to
+    hold more rows, the bound was wrong and all kinds are written
+    again from the statistic, so the bytes still depend only on the
+    rows."""
+    bound = dict(zip(("nodes", "ways", "rels"), rows or (None,) * 3))
     kinds = [
         (kind, df)
         for kind, df in zip(("nodes", "ways", "rels"), frames)
-        if df is not None
+        if df is not None and (parts is not None or bound[kind] != 0)
     ]
-    if not kinds:
-        return []
-    ranged = [
-        df.repartitionByRange(parts, "id")
-        .sortWithinPartitions("id")
-        .select(
-            "*",
-            F.lit(kind).alias("_kind"),
-            F.spark_partition_id().alias("_part"),
+    trusted = {
+        kind for kind, _df in kinds
+        if parts is None and bound[kind] is not None
+        and bound[kind] <= CHUNK_ROWS
+    }
+    measured = [(kind, df) for kind, df in kinds if kind not in trusted]
+    hist = _histograms(measured) if measured else {}
+    one, many, n_chunks = [], [], 0
+    for kind, df in kinds:
+        tagged = df.select("*", F.lit(kind).alias("_kind"))
+        bounds = []
+        if kind not in trusted:
+            n = sum(c for _, c in hist.get(kind, ()))
+            if not n:
+                continue
+            bounds = _bounds(hist[kind], parts or -(-n // CHUNK_ROWS))
+        if bounds:
+            many.append(tagged.withColumn(
+                "_part", _chunk_of(_bucket(F.col("id")), bounds)
+            ))
+            n_chunks += len(bounds) + 1
+        else:
+            one.append(
+                tagged.withColumn("_part", F.lit(0))
+                .coalesce(1)
+                .sortWithinPartitions("id")
+            )
+    if many:
+        one.append(
+            _union(many)
+            .repartition(n_chunks, "_kind", "_part")
+            .sortWithinPartitions("_kind", "_part", "id")
         )
-        for kind, df in kinds
-    ]
-    union = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), ranged
-    )
-    cores = union.sparkSession.sparkContext.defaultParallelism
-    out = union.coalesce(min(parts * len(kinds), cores)).mapInPandas(
+    if not one:
+        return []
+    # with spark.sql.unionOutputPartitioning (on by default) the union
+    # of the one-chunk kinds' single partitions is ONE partition: they
+    # encode one after another in one Python task, at most
+    # 3 * CHUNK_ROWS rows, which saves the fixed cost of two tasks
+    out = _union(one).mapInPandas(
         _writer(encode, name, {kind: df.columns for kind, df in kinds}),
         "path string, kind string, n_rows long",
     )
-    # coalescing mixes the kinds' partitions: restore kind order, then
-    # range order (the zero-padded range index in the file name)
+    # the union's tasks finish in any order: restore kind order, then
+    # chunk order (the zero-padded chunk ordinal in the file name)
     order = {kind: k for k, (kind, _df) in enumerate(kinds)}
-    return sorted(
+    manifest = sorted(
         (r.asDict() for r in out.collect()),
         key=lambda r: (order[r["kind"]], r["path"]),
     )
+    if any(m["kind"] in trusted and m["n_rows"] > CHUNK_ROWS
+           for m in manifest):
+        return _write_kinds(frames, parts, encode, name)
+    return manifest
 
 
 def write_wire_dir(
@@ -171,12 +284,13 @@ def write_wire_dir(
     rels: DataFrame,
     out_dir: str,
     fmt: str = "o5m",
-    parts: int = 8,
+    parts: int | None = None,
 ) -> list[dict]:
     """Write (nodes, ways, rels) as a directory of standalone wire
-    part files; returns the manifest rows. Range partitioning keeps
-    each part id-sorted AND the id ranges disjoint, so any part is
-    a valid extract on its own."""
+    part files, `parts` per non-empty kind or ceil(rows / CHUNK_ROWS)
+    when None; returns the manifest rows. Each part is id-sorted and
+    the kind's parts hold disjoint id ranges, so any part is a valid
+    extract on its own."""
     os.makedirs(out_dir, exist_ok=True)
     return _write_kinds(
         (nodes, ways, rels),
@@ -262,21 +376,27 @@ def write_wire_single(
     path: str,
     fmt: str = "o5m",
     dialect: str | None = None,
-    parts: int = 8,
+    parts: int | None = None,
     file_timestamp: int | None = None,
+    rows: tuple[int | None, int | None, int | None] | None = None,
 ) -> None:
     """One complete wire file, globally id-ordered.
 
-    Parallel by default: each type's DataFrame is range-partitioned
-    on id and encoded to standalone body chunks ON THE EXECUTORS
-    (>1 encode task per file — the round-2 serial-driver-encode
-    bottleneck is gone); the driver only streams header + chunks +
-    footer into the output file. Chunk concatenation is format-
-    legal: o5m resets state at 0xff (each chunk leads with one),
-    PBF blobs are independent, XML objects are self-contained. Only
-    XML is byte-identical to the serial render; o5m and PBF decode
-    to the same objects, but their bytes follow the sampled chunk
-    boundaries (see the module docstring).
+    Parallel: each type's rows are cut into id chunks that are
+    encoded to standalone bodies ON THE EXECUTORS, all kinds in one
+    action; the driver only streams header + chunks + footer into
+    the output file. A kind gets `parts` chunks, or ceil(rows /
+    CHUNK_ROWS) when None, and the boundaries depend only on the
+    rows, so the same rows always give the same bytes. Chunk
+    concatenation is format-legal: o5m resets state at 0xff (each
+    chunk leads with one), PBF blobs are independent, XML objects
+    are self-contained. XML is byte-identical to the serial render
+    at any chunking; o5m and PBF decode to the same objects.
+
+    rows: upper bounds on the (nodes, ways, rels) row counts where
+    the caller knows them (None where not). They spare the
+    statistic's aggregate action when every kind fits one chunk;
+    they do not change the bytes (see _write_kinds).
 
     dialect (XML emulation variants) still uses the serial driver
     encoder — dialect files exist for byte-diff differentials on
@@ -307,6 +427,7 @@ def write_wire_single(
             parts,
             partial(_encode_body, fmt),
             os.path.join(tmp_dir, "chunk-{kind}-{part:05d}.bin"),
+            rows,
         )
         header = _pbf_header() if fmt == "pbf" else _HEADERS[fmt]
         if file_timestamp is not None and fmt == "o5m":

@@ -131,7 +131,9 @@ def _ref_ahash(doc_id: int) -> tuple[int, int]:
             b = (y * 8 // h) * 8 + (x * 8 // w)
             vals[b] += luma[y, x]
             cnt[b] += 1
-    vals = vals // cnt
+    # an image narrower or shorter than 8 px leaves blocks with no
+    # pixel; like bmp_ahash they average to 0
+    vals = vals // np.maximum(cnt, 1)
     mean = int(vals.sum()) // 64
     bits = (vals > mean).astype(np.int64)
     idx = np.arange(64)

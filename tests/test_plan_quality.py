@@ -526,7 +526,10 @@ def test_wire_single_encodes_all_kinds_in_one_collect(
     spark, world_pbf, tmp_path, monkeypatch
 ):
     """write_wire_single encodes all three kinds in one Python stage
-    and one collect, not one action per kind."""
+    and one collect, not one action per kind. Without row bounds the
+    chunking statistic is one more collect, an aggregate with no
+    Python stage; bounds that fit one chunk spare it, and the bytes
+    are the same either way."""
     from osmgraft.sources.auto import decode_osm_auto
     from osmgraft.sources.osmxml import split_decoded
     from osmgraft.wire.spark import write_wire_single
@@ -544,15 +547,23 @@ def test_wire_single_encodes_all_kinds_in_one_collect(
     monkeypatch.setattr(cls, "collect", collect)
     try:
         write_wire_single(*frames, str(tmp_path / "o.o5m"), fmt="o5m")
+        write_wire_single(*frames, str(tmp_path / "b.o5m"), fmt="o5m",
+                          rows=(300, 20, 8))
     finally:
         decoded.unpersist()
-    assert len(collected) == 1
-    names = _node_names(
-        collected[0]._jdf.queryExecution().executedPlan()
-    )
-    # the decode reads the cache: the only Python stage is the encode
-    assert names.count("MapInPandas") == 1, names
-    assert names.count("InMemoryTableScan") == 3, names
+    assert (tmp_path / "o.o5m").read_bytes() == \
+        (tmp_path / "b.o5m").read_bytes()
+    assert len(collected) == 3
+    names = [_node_names(df._jdf.queryExecution().executedPlan())
+             for df in collected]
+    # the statistic reads the cache and runs no Python
+    assert names[0].count("MapInPandas") == 0, names[0]
+    assert names[0].count("InMemoryTableScan") == 3, names[0]
+    for encode in names[1:]:
+        # the decode reads the cache: the only Python stage is the
+        # encode
+        assert encode.count("MapInPandas") == 1, encode
+        assert encode.count("InMemoryTableScan") == 3, encode
 
 
 # ---------------------------------------------------------------
@@ -609,12 +620,43 @@ def border_converts(spark, tmp_path_factory):
 
 
 def test_border_convert_job_budget(border_converts):
-    """Each keep set is decided once and the relation closure runs in
-    one task: a seeded border convert stays within 26 Spark jobs (49
-    when the keep sets were re-derived per stage and the closure ran
-    a driver loop)."""
+    """Each keep set is decided once, the relation closure runs in
+    one task and the sink writes each kind as one sorted chunk: a
+    seeded border convert stays within 17 Spark jobs (25 with the
+    range-sampled sink and a job for the closure's cap count, 49 when
+    the keep sets were re-derived per stage and the closure ran a
+    driver loop)."""
     for jobs, _ in border_converts:
-        assert len(jobs) <= 26, jobs
+        assert len(jobs) <= 17, jobs
+
+
+@pytest.fixture(scope="module")
+def clip_converts(spark, tmp_path_factory):
+    """Two `-B --complete-ways` converts of the benchmark's seed-101
+    clip extract (3000 nodes, hashed ids) in one session; returns the
+    jobs of each."""
+    from osmgraft.cli import convert
+    from perfbench.inputs import osm_input
+
+    work = tmp_path_factory.mktemp("clip")
+    d = osm_input(str(work), 101, 3000)
+    args = [f"{d}/in.pbf", f"-B={d}/clip.poly", "--complete-ways",
+            f"-o={work}/out.o5m"]
+    return [_jobs_of(spark, lambda: convert(spark, args))[0]
+            for _ in range(2)]
+
+
+def test_clip_convert_job_budget(clip_converts):
+    """A warm clip convert runs at most 15 Spark jobs (23 with the
+    range-sampled sink). The closure's cap count is observed on its
+    checkpoint, not counted by a job, and the sink writes one-chunk
+    kinds with no statistic and no shuffle: at most the three
+    semi-joins' broadcasts and the encode."""
+    warm = clip_converts[1]
+    assert len(warm) <= 15, warm
+    labels = [d for _, d in warm]
+    assert "relation closure: cap count" not in labels, warm
+    assert labels.count("convert: write .o5m") <= 4, warm
 
 
 def test_convert_jobs_are_described(border_converts):
