@@ -11,7 +11,7 @@ SURVEY.md G1/J5):
                                  | per-polygon bbox reject inside
                                  | the kernel
   per-node exact ray-cast PIP    | vectorized numpy kernel over
-                                 | Arrow batches (pandas UDF)
+                                 | Arrow batches (Arrow UDF)
   polygon table in RAM           | sc.broadcast(PolygonSet) — one
                                  | copy per executor, not per task
 
@@ -25,16 +25,14 @@ matters downstream when grouping by cell — see tiles.py.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..geo.cells import DEFAULT_SHIFT, LAT_OFFSET, LON_OFFSET, _lon_bits
+from ..geo.fixedpoint import NIL
 from ..geo.pip import PolygonSet, assign_polygons, query_inside
 
 
@@ -71,13 +69,29 @@ def with_cell(
     )
 
 
-_ASSIGN_SCHEMA = StructType(
-    [
-        StructField("region", StringType()),
-        StructField("subregion", StringType()),
-        StructField("region_admin", IntegerType()),
-    ]
-)
+_ASSIGN_TYPE = "region string, subregion string, region_admin int"
+
+
+def region_columns(
+    px: np.ndarray, py: np.ndarray, ps: PolygonSet
+) -> dict[str, pa.Array]:
+    """The per-batch body of every PIP UDF: int64 points (NIL where
+    there is no point, which lies outside every polygon bbox) ->
+    region, subregion and region_admin arrays, null where none.
+
+    The NIL sentinel lets callers skip a Catalyst-side null filter
+    that would re-evaluate expensive upstream expressions (CSE does
+    not span Filter/Project boundaries)."""
+    r, s = assign_polygons(px, py, ps)
+    names = pa.array(list(ps.names), pa.string())
+    region = pa.array(r, mask=r < 0)
+    return {
+        "region": names.take(region),
+        "subregion": names.take(pa.array(s, mask=s < 0)),
+        "region_admin": pa.array(
+            ps.admin_levels.astype(np.int32), pa.int32()
+        ).take(region),
+    }
 
 
 def assign_regions(
@@ -101,32 +115,17 @@ def assign_regions(
                           gx1, gy1, gx2, gy2)
         )
 
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(polyset)
-    admin_by_idx = polyset.admin_levels
+    bc = df.sparkSession.sparkContext.broadcast(polyset)
 
-    @F.pandas_udf(_ASSIGN_SCHEMA)
-    def _assign(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        ps = bc.value
-        # nulls (ungeocoded rows) -> NIL sentinel, outside every
-        # polygon bbox; lets callers skip a Catalyst-side null
-        # filter that would re-evaluate expensive upstream exprs
-        # (CSE does not span Filter/Project boundaries)
-        r, s = assign_polygons(
-            lon.fillna(2_000_000_000).to_numpy("int64"),
-            lat.fillna(2_000_000_000).to_numpy("int64"),
-            ps,
+    @F.arrow_udf(_ASSIGN_TYPE)
+    def _assign(lat: pa.Array, lon: pa.Array) -> pa.Array:
+        cols = region_columns(
+            pc.fill_null(lon, NIL).to_numpy().astype(np.int64),
+            pc.fill_null(lat, NIL).to_numpy().astype(np.int64),
+            bc.value,
         )
-        # fancy-index name lookup; trailing None catches idx == -1
-        names = np.array(list(ps.names) + [None], dtype=object)
-        admins = np.append(admin_by_idx, 0)
-        adm = pd.Series(admins[r], dtype="Int32")
-        adm[r < 0] = None
-        return pd.DataFrame(
-            {"region": names[r], "subregion": names[s],
-             "region_admin": adm}
+        return pa.StructArray.from_arrays(
+            list(cols.values()), names=list(cols)
         )
 
     # deterministic in fact, but marked nondeterministic so Catalyst

@@ -11,9 +11,9 @@ the reference's deterministic text handling; tests re-extract from
 
 Geocoding plays the osmgeobase/osmposition role (SURVEY.md G12):
 recognize a gazetteer term in the text and resolve it to fixed-point
-coordinates. Implemented as codegen'd Catalyst expressions against a
-term array and a packed coordinate map literal — no Python, no
-shuffle.
+coordinates. Implemented as one pyarrow kernel per Arrow batch
+(`geocode_arrow`), which the flagship runs inside its single Arrow
+UDF together with the PIP join; no shuffle.
 """
 
 from __future__ import annotations
@@ -22,6 +22,8 @@ import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -33,10 +35,10 @@ from pyspark.sql.types import (
 )
 
 from .fixtures import (
-    N_CITIES,
     gazetteer_arrays,
     place_for_doc,
 )
+from .geo.fixedpoint import NIL
 
 _LANGS = ["en", "de", "fr", "ja", "pt"]
 
@@ -124,82 +126,85 @@ def _common_prefix(terms: list[str]) -> str:
     return p
 
 
+def geocode_arrow(text: pa.Array, terms: pa.Array) -> np.ndarray:
+    """-> int64 index into `terms` of each row's first matching token,
+    or -1 (the per-batch kernel of `geocode` and the flagship UDF).
+
+    The first token (split on single spaces) that equals a term wins
+    (the reference geocoder also tokenizes its input and takes the
+    top candidate, osmposition.c:966-1101, 1229-1247). A token
+    matches only as a whole: "City05," is not "City05", and neither
+    is "City05\tCity06". Empty tokens and null text match nothing.
+    `index_in` hashes the term set once per batch, in C++.
+    """
+    toks = pc.split_pattern(text, " ")
+    hit = pc.fill_null(
+        pc.index_in(pc.list_flatten(toks), value_set=terms), -1
+    ).to_numpy()
+    row = pc.list_parent_indices(toks).to_numpy()
+    found = hit >= 0
+    row, hit = row[found], hit[found]
+    # tokens are in row order, so a row's first hit is where the
+    # parent index changes
+    first = np.ones(len(row), dtype=bool)
+    first[1:] = row[1:] != row[:-1]
+    out = np.full(len(text), -1, dtype=np.int64)
+    out[row[first]] = hit[first]
+    return out
+
+
+def gazetteer_lookup(text: pa.Array):
+    """text -> (lat_i, lon_i, found): int64 gazetteer coordinates, NIL
+    (outside every polygon bbox) where no term is found."""
+    terms, lat_i, lon_i, _w = gazetteer_arrays()
+    idx = geocode_arrow(text, pa.array(terms, pa.string()))
+    found = idx >= 0
+    return (
+        np.where(found, lat_i[idx], NIL),
+        np.where(found, lon_i[idx], NIL),
+        found,
+    )
+
+
+def geocode_prefilter(pages: DataFrame, text_col: str = "text") -> DataFrame:
+    """Keep the rows whose raw text contains the gazetteer's longest
+    common prefix (when it has >= 3 chars): a substring test that
+    pushes down into the scan and that every term match implies."""
+    lcp = _common_prefix(list(gazetteer_arrays()[0]))
+    if len(lcp) < 3:
+        return pages
+    return pages.filter(F.col(text_col).contains(lcp))
+
+
+_GEOCODE_TYPE = "lat_i long, lon_i long"
+
+
 def geocode(
     pages: DataFrame, text_col: str = "text", prefilter: bool = True
 ) -> DataFrame:
     """Resolve each page to fixed-point coords via the gazetteer
     (SURVEY.md G12). Adds lat_i/lon_i (null when no term found).
 
-    The first token (split on single spaces) that is a gazetteer term
-    wins (the reference geocoder also tokenizes its input and takes
-    the top candidate, osmposition.c:966-1101, 1229-1247). A token
-    matches only as a whole: "City05," is not "City05".
+    One Arrow UDF over `text` runs `geocode_arrow` once per batch
+    (`gazetteer_lookup`). It is marked nondeterministic, as
+    assign_regions' UDF is, so Catalyst evaluates it once even
+    though both coordinates and any later filter read it.
 
-    Entirely JVM-side, and no expression on the hot path falls back
-    to interpreted evaluation (no lambda, no higher-order function):
-    `array_intersect(split(text, " "), array(<terms>))` keeps the
-    left array's order, so its first element is the first matching
-    token, and one lookup in a packed (lat<<32|lon) map literal turns
-    that token into coordinates. Per row this costs O(tokens + terms):
-    `array_intersect` hashes the term array once per row, then probes
-    each token. A corpus-scale gazetteer would want a set built once
-    per task instead; that is out of scope for the 80-term gazetteer.
-
-    Two deliberate plan-shape choices (both measured on 1M pages):
-
-    - The term extraction is evaluated EXACTLY ONCE per row: every
-      downstream column derives from the one packed lookup inside
-      one Project. Catalyst's subexpression elimination dedupes
-      within a Project but NOT across Filter/Project boundaries — a
-      plan that filters on an extraction-derived column re-runs the
-      extraction (observed 2x wall time). Callers must therefore not
-      filter on lat_i/lon_i before the next pipeline barrier;
-      flagship pushes the bbox/null handling into the PIP kernel
-      instead.
-    - `prefilter` drops obviously-ungeocodable rows with a cheap
-      substring `contains` on the RAW text (longest common prefix
-      of the gazetteer, if >= 3 chars) before the extraction runs.
-      It is conservative: contains(prefix) is implied by any term
-      match, so no geocodable row is lost.
-
-    Gazetteers with multi-word terms fall back to one alternation
-    regex with substring semantics (leftmost match wins).
+    `prefilter` drops obviously-ungeocodable rows before the UDF
+    runs (`geocode_prefilter`); no geocodable row is lost.
     """
-    terms, lat_i, lon_i, _w = gazetteer_arrays()
-
     if prefilter:
-        lcp = _common_prefix(list(terms))
-        if len(lcp) >= 3:
-            pages = pages.filter(F.col(text_col).contains(lcp))
+        pages = geocode_prefilter(pages, text_col)
 
-    pairs = []
-    for t, la, lo in zip(terms, lat_i.tolist(), lon_i.tolist()):
-        pairs += [F.lit(t), F.lit((int(la) << 32) | int(lo))]
-    packed_map = F.create_map(*pairs)
-
-    if any(" " in t for t in terms):
-        # multi-word gazetteer terms: fall back to the alternation
-        # regex (substring semantics). ~2.3x slower than the token
-        # path on 4M pages — single-token gazetteers get the fast
-        # path below.
-        pattern = "(" + "|".join(re.escape(t) for t in terms) + ")"
-        term = F.regexp_extract(F.col(text_col), pattern, 1)
-        packed = F.try_element_at(packed_map, term)
-    else:
-        # token path: the first split token that is a term, then one
-        # map probe. try_element_at everywhere: an empty intersection
-        # or a missing key yields NULL under ANSI.
-        first = F.try_element_at(
-            F.array_intersect(
-                F.split(F.col(text_col), " "),
-                F.array(*[F.lit(t) for t in terms]),
-            ),
-            F.lit(1),
+    @F.arrow_udf(_GEOCODE_TYPE)
+    def _geocode(text: pa.Array) -> pa.Array:
+        lat, lon, found = gazetteer_lookup(text)
+        return pa.StructArray.from_arrays(
+            [pa.array(lat, mask=~found), pa.array(lon, mask=~found)],
+            names=["lat_i", "lon_i"],
         )
-        packed = F.try_element_at(packed_map, first)
-    return pages.withColumns(
-        {
-            "lat_i": F.shiftright(packed, 32).cast("long"),
-            "lon_i": packed.bitwiseAND(F.lit((1 << 32) - 1)).cast("long"),
-        }
-    )
+
+    g = _geocode.asNondeterministic()(F.col(text_col))
+    return pages.withColumn("_g", g).withColumns(
+        {"lat_i": F.col("_g.lat_i"), "lon_i": F.col("_g.lon_i")}
+    ).drop("_g")

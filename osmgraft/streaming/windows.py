@@ -137,18 +137,17 @@ def streaming_flagship(
     watermark: str = "20 minutes",
 ):
     """The FLAGSHIP pipeline as a structured stream: pages files ->
-    geocode (Catalyst token probe) -> cell encode -> broadcast
-    polygon PIP (Arrow UDF — pandas UDFs run unchanged in streaming
-    micro-batches) -> watermarked per-region tumbling-window counts.
+    geocode + broadcast polygon PIP (one Arrow UDF — Arrow UDFs run
+    unchanged in streaming micro-batches) -> cell encode ->
+    watermarked per-region tumbling-window counts.
 
     This is the continuous-ingest shape of the engine's main query:
     a Common-Crawl-style crawl feed lands as files, and region/tile
     activity materializes incrementally with late-data tolerance —
     the same plan as flagship_assign per micro-batch, zero shuffles
     until the windowed aggregate."""
-    from ..fixtures import fixture_polyset
-    from ..operators.spatial import assign_regions, with_cell
-    from ..pages import PAGES_SCHEMA, geocode
+    from ..operators.flagship import flagship_points
+    from ..pages import PAGES_SCHEMA
 
     stream = (
         spark.readStream.schema(PAGES_SCHEMA)
@@ -156,12 +155,8 @@ def streaming_flagship(
         .option("recursiveFileLookup", "true")
         .parquet(pages_dir)
     )
-    # same stages as flagship_assign, keeping warc_ts for the
-    # event-time window
-    pts = with_cell(geocode(stream))
-    assigned = assign_regions(
-        pts, fixture_polyset(), prefilter_bbox=False
-    )
+    # the flagship stages, keeping warc_ts for the event-time window
+    assigned = flagship_points(stream)
     return (
         assigned.withColumn("ts", F.col("warc_ts"))
         .withWatermark("ts", watermark)

@@ -4621,9 +4621,10 @@ def q36_geobase_build(spark, sf_dir):
 
 def q37_geocode_text(spark, sf_dir):
     """G12 geocode: synthesize the pages table (mapInPandas), run
-    the JVM-side regex geocoder over the EXTRACTED TEXT, and emit
-    resolved coordinates — checked against the planting rule, i.e.
-    an end-to-end test of make_html -> extract_text -> geocode."""
+    the token geocoder (one pyarrow lookup per Arrow batch) over the
+    EXTRACTED TEXT, and emit resolved coordinates — checked against
+    the planting rule, i.e. an end-to-end test of make_html ->
+    extract_text -> geocode."""
     from .pages import geocode, synth_pages
 
     n = load(spark, sf_dir, "documents").count()

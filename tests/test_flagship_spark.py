@@ -5,6 +5,7 @@ osmassignpoly on the same points and polygons."""
 import numpy as np
 import pytest
 from hypothesis import example, given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from osmgraft.fixtures import (
     POLY_TEXT,
@@ -12,6 +13,7 @@ from osmgraft.fixtures import (
     gazetteer_arrays,
     place_for_doc,
 )
+from osmgraft.geo.pip import assign_polygons
 from osmgraft.operators.flagship import flagship_assign
 from osmgraft.pages import extract_text, synth_pages
 
@@ -62,7 +64,10 @@ def test_geocode_hits_gazetteer(spark, pages):
 _TERMS = gazetteer_arrays()[0]
 _TOKENS = st.sampled_from(
     [*_TERMS[:3], _TERMS[-1], "City", "City5", "city01", "xCity02",
-     _TERMS[1] + ",", "(" + _TERMS[2] + ")", "page", ""]
+     _TERMS[1] + ",", "(" + _TERMS[2] + ")", "page", "",
+     # non-ASCII tokens; a tab does not split; a trailing space
+     "Zürich", _TERMS[1] + "é", _TERMS[4] + "\t" + _TERMS[5],
+     _TERMS[6] + " "]
 )
 _TEXTS = st.one_of(
     st.none(),
@@ -84,9 +89,13 @@ def _first_term(text):
     return (None, None)
 
 
+_EXAMPLE = [f"at {_TERMS[1]} and {_TERMS[0]}", f"near {_TERMS[2]}, downtown",
+            f"{_TERMS[3]},  then  {_TERMS[4]}", "", None,
+            f"Zürich {_TERMS[7]}é\t{_TERMS[8]} {_TERMS[9]} "]
+
+
 @settings(max_examples=25, deadline=None)
-@example([f"at {_TERMS[1]} and {_TERMS[0]}", f"near {_TERMS[2]}, downtown",
-          f"{_TERMS[3]},  then  {_TERMS[4]}", "", None])
+@example(_EXAMPLE)
 @given(st.lists(_TEXTS, min_size=1, max_size=8))
 def test_geocode_first_term_wins(spark, texts):
     """geocode == a Python first-token-wins reference, with and without
@@ -105,6 +114,75 @@ def test_geocode_first_term_wins(spark, texts):
             if not prefilter or (t is not None and "City" in t)
         }
         assert got == want, prefilter
+
+
+@settings(max_examples=15, deadline=None)
+@example(_EXAMPLE)
+@given(st.lists(_TEXTS, min_size=1, max_size=8))
+def test_flagship_fused_equals_staged(spark, texts):
+    """The one-UDF flagship == its stages run one after another:
+    assign_regions(with_cell(geocode(df))), with and without
+    keep_noregion (which keeps geocoded rows in no region only)."""
+    from osmgraft.operators.spatial import assign_regions, with_cell
+    from osmgraft.pages import geocode
+
+    df = spark.createDataFrame(
+        [(str(i), t) for i, t in enumerate(texts)], "url string, text string"
+    )
+    cols = ["url", "lat_i", "lon_i", "cell", "region", "subregion"]
+    for keep in (False, True):
+        staged = assign_regions(
+            with_cell(geocode(df)), fixture_polyset(), keep_noregion=keep
+        ).filter(F.col("lat_i").isNotNull())
+        want = sorted(tuple(r) for r in staged.select(cols).collect())
+        got = sorted(
+            tuple(r)
+            for r in flagship_assign(df, keep_noregion=keep).collect()
+        )
+        assert got == want, keep
+
+
+def _numpy_flagship(pages):
+    """url -> (lat_i, lon_i, cell, region, subregion), computed without
+    Spark's geocode or PIP: each page's planted city, assigned by
+    geo.pip.assign_polygons in numpy."""
+    from osmgraft.geo.cells import cell_encode
+
+    rows = pages.select("doc_id", "url").collect()
+    ids = np.array([r.doc_id for r in rows], dtype=np.int64)
+    city = place_for_doc(ids)
+    _, lat_i, lon_i, _ = gazetteer_arrays()
+    ps = fixture_polyset()
+    keep = city >= 0
+    la, lo = lat_i[city[keep]], lon_i[city[keep]]
+    reg, sub = assign_polygons(lo, la, ps)
+    cell = cell_encode(la, lo)
+    name = lambda k: ps.names[k] if k >= 0 else None  # noqa: E731
+    urls = [r.url for r, k in zip(rows, keep) if k]
+    return {
+        u: (int(a), int(o), int(c), name(r), name(s))
+        for u, a, o, c, r, s in zip(urls, la, lo, cell, reg, sub)
+    }
+
+
+@pytest.mark.parametrize("keep_noregion", [False, True])
+def test_flagship_keep_noregion_vs_numpy(spark, pages, keep_noregion):
+    """flagship_assign == numpy assign_polygons on the geocoded points:
+    ungeocoded pages are dropped; geocoded pages in no region are kept
+    (null region) only under keep_noregion."""
+    want = {
+        u: v for u, v in _numpy_flagship(pages).items()
+        if keep_noregion or v[3] is not None
+    }
+    got = {
+        r.url: (r.lat_i, r.lon_i, r.cell, r.region, r.subregion)
+        for r in flagship_assign(pages, keep_noregion=keep_noregion)
+        .collect()
+    }
+    assert got == want
+    if keep_noregion:
+        # the fixture must exercise the no-region branch
+        assert any(v[3] is None for v in want.values())
 
 
 def test_flagship_differential_vs_reference(spark, pages, tmp_path):

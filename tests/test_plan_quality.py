@@ -8,6 +8,8 @@ needed, and broadcast (not shuffled) joins for small sides."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -33,41 +35,45 @@ def pages(spark, tmp_path_factory):
     return spark.read.parquet(p)
 
 
-def test_flagship_plan_shape(pages):
+def _flagship_plans(pages):
     from osmgraft.operators.flagship import flagship_assign
 
-    plan = _formatted(flagship_assign(pages))
-    # column pruning: the binary html column must never be read
-    assert "html" not in plan
-    assert "ReadSchema: struct<url:string,text:string>" in plan
-    # the cheap prefilter reaches the parquet scan
-    assert "StringContains(text,City)" in plan
-    # exactly ONE Python stage — the vectorized PIP kernel (PIP
-    # inlined as Catalyst expressions measured >10x slower on 4M
-    # pages: codegen blowup + deterministic filter pushdown
-    # duplicating the chain; BASELINE.md)
-    assert plan.count("ArrowEvalPython (") == 1
-    # zero shuffles: broadcast polygons, partition-local points
-    assert "Exchange" not in plan
-    # geocode has no lambda: higher-order functions fall back to
-    # interpreted evaluation, which cost more than the PIP join
-    assert "lambdafunction" not in plan
+    return [
+        _formatted(flagship_assign(pages, keep_noregion=keep))
+        for keep in (False, True)
+    ]
+
+
+def test_flagship_plan_shape(pages):
+    for plan in _flagship_plans(pages):
+        # column pruning: the binary html column must never be read
+        assert "html" not in plan
+        assert "ReadSchema: struct<url:string,text:string>" in plan
+        # the cheap prefilter reaches the parquet scan
+        assert "StringContains(text,City)" in plan
+        # exactly ONE Python stage — geocode and the vectorized PIP
+        # kernel together (PIP inlined as Catalyst expressions
+        # measured >10x slower on 4M pages: codegen blowup +
+        # deterministic filter pushdown duplicating the chain;
+        # BASELINE.md)
+        assert plan.count("ArrowEvalPython (") == 1
+        # zero shuffles: broadcast polygons, partition-local points
+        assert "Exchange" not in plan
+        # no higher-order functions: they fall back to interpreted
+        # evaluation, which cost more than the PIP join
+        assert "lambdafunction" not in plan
 
 
 def test_flagship_single_extraction(pages):
-    """The geocode term extraction appears in exactly one Project
-    operator — no Filter on derived columns re-runs it."""
-    from osmgraft.operators.flagship import flagship_assign
-
-    plan = _formatted(flagship_assign(pages))
-    # the packed-map lookup string appears once per derived column
-    # within ONE Project node and nowhere else (notably: not inside
-    # any Filter condition)
-    for line in plan.splitlines():
-        if line.startswith("Condition") and "split(" in line:
-            raise AssertionError(
-                f"geocode extraction leaked into a Filter: {line[:120]}"
-            )
+    """The geocode runs once per row, inside the one Arrow UDF: its
+    only input is text, and the JVM plan holds no geocode expression
+    (the per-row array_intersect hash set over split tokens)."""
+    for plan in _flagship_plans(pages):
+        assert "array_intersect" not in plan
+        assert "split(" not in plan
+        args = re.findall(r"^Arguments: \[(.*?)\], \[", plan, re.M)
+        assert len(args) == 1, args
+        assert re.fullmatch(r"\w+\(text#\d+\)#\d+", args[0]), args
 
 
 def test_bbox_filter_pushdown(spark):

@@ -26,6 +26,7 @@ import os
 import re
 import sys
 import time
+from collections import defaultdict
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -263,7 +264,7 @@ def _capture_plan(spark, fn, sf_dir, full: bool) -> str:
     checkpoints stop truncating the printed plan (the round-4
     PLANS.md q63/q69 caveat). Bounded driver-side collect()s inside
     builders still run either way — they are plan-time scalars."""
-    from pyspark.sql import DataFrame
+    from pyspark.sql import DataFrame, Observation
 
     if not full:
         df = fn(spark, sf_dir)
@@ -289,12 +290,19 @@ def _capture_plan(spark, fn, sf_dir, full: bool) -> str:
         c.localCheckpoint = (
             lambda self, eager=True: self  # type: ignore
         )
+    # with no checkpoint run, an Observation attached before one
+    # never fills and its `get` blocks forever (graph._closure's cap
+    # count, q27/q38); read its metrics as 0 instead. The builders
+    # use them only for the cap warning, never for the plan
+    obs_get = Observation.get
+    Observation.get = property(lambda self: defaultdict(int))
     try:
         df = fn(spark, sf_dir)
         return df._jdf.queryExecution().executedPlan().toString()
     finally:
         for c, o in origs:
             c.localCheckpoint = o
+        Observation.get = obs_get
 
 
 def main() -> None:
