@@ -83,14 +83,6 @@ def _spread_sql(expr: str, dialect: str) -> str:
     return x
 
 
-def band_sql(col: str, offset: int, shift: int, dialect: str) -> str:
-    """Fixed-point coord column -> cell band, as SQL."""
-    e = f"(CAST({col} AS BIGINT) + {offset})"
-    if dialect == "spark":
-        return f"shiftright({e}, {shift})"
-    return f"({e} >> {shift})"
-
-
 def morton_sql(
     latb_expr: str, lonb_expr: str, dialect: str = "spark"
 ) -> str:

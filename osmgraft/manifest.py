@@ -98,68 +98,6 @@ def run_resumable(
     spark = df.sparkSession
     done = committed_buckets(spark, out_dir)
     pending = sorted(set(range(n_buckets)) - done)
-    return _write_groups(
-        df, out_dir, pending, buckets_per_commit, input_lineage,
-        max_commits,
-    )
-
-
-def refresh_committed(
-    df: DataFrame,
-    out_dir: str,
-    affected: list[int],
-    input_lineage: str,
-    buckets_per_commit: int = 16,
-    max_commits: int | None = None,
-) -> int:
-    """Incrementally refresh an ALREADY-COMMITTED output: rewrite
-    only `affected` buckets from `df` (the lazy full new view — the
-    bucket filter prunes what is scanned), appending manifest rows
-    under the NEW `input_lineage` (the refresh epoch, e.g. the
-    changefile's snapshot id).
-
-    Resume semantics mirror run_resumable across epochs: a bucket
-    whose LATEST manifest row already carries `input_lineage` was
-    committed by a previous attempt of THIS refresh and is skipped,
-    so a killed refresh re-runs only still-stale buckets. Buckets
-    outside `affected` keep their old data and manifest rows —
-    exactly Iceberg's overwrite-by-partition-filter snapshot.
-
-    This is the storage half of tiles.tile_rollup_incremental: the
-    operator computes the post-change view + affected cells; this
-    commits the affected cell-buckets durably (daily-diff cadence
-    at 10^12 rows: ~10^5 of ~10^4-row buckets rewritten, the rest
-    untouched)."""
-    spark = df.sparkSession
-    latest = (
-        manifest_df(spark, out_dir)
-        .groupBy("bucket")
-        .agg(F.max_by("input_lineage", "committed_at").alias("lin"))
-    )
-    fresh = {
-        r.bucket
-        for r in latest.filter(
-            F.col("lin") == input_lineage
-        ).collect()
-    }
-    pending = sorted(set(affected) - fresh)
-    return _write_groups(
-        df, out_dir, pending, buckets_per_commit, input_lineage,
-        max_commits,
-    )
-
-
-def _write_groups(
-    df: DataFrame,
-    out_dir: str,
-    pending: list[int],
-    buckets_per_commit: int,
-    input_lineage: str,
-    max_commits: int | None,
-) -> int:
-    if not pending:
-        return 0
-    spark = df.sparkSession
     data_cols = [c for c in df.columns if c != "bucket"]
     data_dir = os.path.join(out_dir, "data")
     mdir = os.path.join(out_dir, "manifest")
@@ -199,52 +137,6 @@ def _write_groups(
         stats.write.mode("append").parquet(mdir)
         commits += 1
     return commits
-
-
-def compact_committed(
-    spark: SparkSession,
-    out_dir: str,
-    buckets_per_pass: int = 16,
-) -> int:
-    """Small-file compaction — the lakehouse maintenance action a
-    long-lived incrementally-refreshed table needs (many refresh
-    epochs -> many small files per bucket; at 10^12 rows the
-    file-count tax hits planning and open() overhead before data
-    size does). Rewrites each committed bucket's data partition
-    coalesced to ~one file per bucket, `buckets_per_pass` buckets
-    per job.
-
-    CONTENT is unchanged by construction, so the manifest needs no
-    new rows and `verify_manifest` must still pass — the existing
-    audit doubles as the compaction correctness check. On Iceberg
-    this is rewrite_data_files; on the parquet stand-in each pass
-    is the same dynamic partition overwrite the writers use (crash
-    mid-pass leaves replaced-on-retry orphans, invisible to
-    read_committed until rewritten). Returns passes executed."""
-    done = sorted(committed_buckets(spark, out_dir))
-    if not done:
-        return 0
-    data_dir = os.path.join(out_dir, "data")
-    passes = 0
-    for g in range(0, len(done), buckets_per_pass):
-        group = done[g : g + buckets_per_pass]
-        # materialize the group before overwriting its source files
-        # (Spark refuses a lazy read-from-overwrite-target); bounded:
-        # one bucket group per pass
-        part = (
-            spark.read.parquet(data_dir)
-            .filter(F.col("bucket").isin(group))
-            .localCheckpoint(eager=True)
-        )
-        (
-            part.repartition(len(group), F.col("bucket"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(data_dir)
-        )
-        passes += 1
-    return passes
 
 
 def read_committed(spark: SparkSession, out_dir: str) -> DataFrame:

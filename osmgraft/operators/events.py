@@ -1,7 +1,6 @@
-"""Event-stream sessionization — the batch twin of the streaming
-session-window role (osmupdate's minutely diffs are an event
-stream over object ids; a web-analytics pipeline's clickstream is
-the same shape over user ids).
+"""Event-stream sessionization (osmupdate's minutely diffs are an
+event stream over object ids; a web-analytics pipeline's
+clickstream is the same shape over user ids).
 
 Gaps-and-islands at scale: ONE shuffle keyed by `user_id` (the
 window partition), then everything — lag, session flags, running
@@ -129,9 +128,8 @@ def event_spikes(
 
 
 def hour_counts(events: DataFrame) -> DataFrame:
-    """(event_type, hr, cnt) — the bounded state event_spikes and
-    its streaming twin both maintain (hr = days-since-epoch * 24 +
-    hour, timezone-free)."""
+    """(event_type, hr, cnt) — the bounded state event_spikes
+    keeps (hr = days-since-epoch * 24 + hour, timezone-free)."""
     hr = (
         F.expr("datediff(to_date(ts), DATE'1970-01-01')") * 24
         + F.hour("ts")
@@ -146,8 +144,7 @@ def hour_counts(events: DataFrame) -> DataFrame:
 def spikes_from_counts(
     counts: DataFrame, factor: int = 2
 ) -> DataFrame:
-    """Finish an (event_type, hr, cnt) table — batch-built or
-    drained from streaming_hour_counts — into the flagged-hours
+    """Finish an (event_type, hr, cnt) table into the flagged-hours
     report event_spikes documents."""
     stats = counts.groupBy("event_type").agg(
         F.sum("cnt").cast("long").alias("total"),
@@ -216,9 +213,7 @@ def interval_pairs(
 ) -> DataFrame:
     """Batch interval join: every (left event, right event) pair of
     the same user with |right.ts - left.ts| <= tolerance_s, gap in
-    exact microseconds. The streaming twin is
-    streaming/joins.streaming_interval_join (same join condition,
-    watermark-bounded state).
+    exact microseconds.
 
     Scale shape: ONE equi-join keyed on user_id (sort-merge or
     shuffled-hash as AQE picks; the range predicate rides along as

@@ -365,7 +365,7 @@ def cell_corridor_join(
 
 def point_cell_col(lat_col: str, lon_col: str, shift: int) -> F.Column:
     """Packed grid-cell id of a point, the geo/cells.py encoding as
-    a Catalyst column (shared by batch and streaming probes)."""
+    a Catalyst column."""
     bits = _lon_bits(shift)
     return F.shiftleft(
         F.shiftright(F.col(lat_col) + F.lit(LAT_OFFSET), shift), bits
@@ -711,59 +711,6 @@ def interpolate_housenumbers(
         F.when(zl, F.col("ay").cast("double"))
         .otherwise(lat_d)
         .alias("lat_d"),
-    )
-
-
-def snap_cell_index(
-    ways: DataFrame,
-    nodes: DataFrame,
-    shift: int = 20,
-    radius: int = 1,
-) -> DataFrame:
-    """Static candidate index for streaming map matching:
-    (cell, segs array<struct way_id, seg_idx, ax, ay, bx, by>) —
-    for every dilated-cover cell, ALL segments of every way whose
-    supercover touches the cell's radius-`radius` neighborhood.
-    Snap completeness is inherited from snap_to_ways' cell
-    geometry (any segment within one cell side S of a point in
-    `cell` has its nearest point inside the neighborhood, hence the
-    way is in the cell's list).  The per-cell list is bounded by
-    local road density; argmin over it is order-independent
-    because (dist2, way_id, seg_idx) is a total order, so
-    collect_list's arrival order does not matter."""
-    cover = way_cell_cover(ways, nodes, shift=shift)
-    dil = dilate_cover(cover, shift, radius)
-
-    pos = ways.select(
-        "way_id", F.posexplode("refs").alias("j", "ref")
-    ).join(
-        nodes.select(
-            F.col("doc_id").alias("ref"),
-            F.col("lon_i").alias("ax"),
-            F.col("lat_i").alias("ay"),
-        ),
-        "ref",
-    )
-    w = Window.partitionBy("way_id").orderBy("j")
-    seg = pos.select(
-        "way_id",
-        (F.col("j") + 1).cast("long").alias("seg_idx"),
-        "ax",
-        "ay",
-        F.lead("ax").over(w).alias("bx"),
-        F.lead("ay").over(w).alias("by"),
-    ).where(F.col("bx").isNotNull())
-
-    return (
-        dil.join(seg, "way_id")
-        .groupBy("cell")
-        .agg(
-            F.collect_list(
-                F.struct(
-                    "way_id", "seg_idx", "ax", "ay", "bx", "by"
-                )
-            ).alias("segs")
-        )
     )
 
 

@@ -306,8 +306,7 @@ def bin_hist(
     df: DataFrame, value_col: str, bin_shift: int = 4
 ) -> DataFrame:
     """The sketch state itself: (bin, _c) counts, one map-side-
-    combined corpus pass.  Mergeable by summation; also the exact
-    state streaming_binned_hist maintains continuously."""
+    combined corpus pass.  Mergeable by summation."""
     v = F.col(value_col).cast("long")
     return df.groupBy(
         F.shiftright(v, bin_shift).alias("bin")
@@ -319,9 +318,9 @@ def quantiles_from_bins(
     ps: tuple[int, ...] = (50, 90, 99),
     bin_shift: int = 4,
 ) -> DataFrame:
-    """Finish a (bin, _c) histogram — batch-built, merged, or
-    drained from the streaming twin — into the certified
-    percentile rows binned_quantiles documents."""
+    """Finish a (bin, _c) histogram — batch-built or merged —
+    into the certified percentile rows binned_quantiles
+    documents."""
     from pyspark.sql import Window
 
     w = Window.orderBy("bin").rowsBetween(

@@ -253,7 +253,7 @@ def read_osc_nodes(spark: SparkSession, path: str) -> DataFrame:
     """C1 ingest: .osc change files -> node change rows with a
     tombstone flag (osmchange.c:1485-1659 semantics: create/modify
     are upserts, delete removes by id). Feed the result straight to
-    operators/merge.change_apply or streaming/changes."""
+    operators/merge.change_apply."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:

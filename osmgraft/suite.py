@@ -1275,8 +1275,7 @@ def q150_interval_join(spark, sf_dir):
     """Batch interval join (events.interval_pairs): every error
     event paired with the same user's click events within ±1800 s,
     gap in exact microseconds — one user-keyed equi-join with the
-    range as a secondary predicate (never a cross product); the
-    stream-stream twin is streaming/joins.streaming_interval_join."""
+    range as a secondary predicate (never a cross product)."""
     from .operators.events import interval_pairs
 
     ev = load(spark, sf_dir, "events")
@@ -2016,7 +2015,7 @@ def q78_sessionize(spark, sf_dir):
     """Event sessionization (operators/events.sessionize):
     gaps-and-islands with a 30-minute inactivity gap over the
     user-keyed event stream — one user-keyed shuffle, no global
-    sort; the batch twin of a streaming session window."""
+    sort."""
     from .operators.events import sessionize
 
     return sessionize(load(spark, sf_dir, "events"), gap_s=1800)

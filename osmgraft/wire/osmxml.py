@@ -282,7 +282,7 @@ def encode_osm_xml(
 ) -> str:
     """Row-dict lists (the readers' shape) -> one .osm document.
     tags=None tombstones are skipped: plain .osm carries no delete
-    semantics (that is .osc's job — streaming/changes.py).
+    semantics (that is .osc's job — encode_osc).
     dialect: None for the native writer, or "pbf2osm"/"osmosis" for
     the reference's --emulate-* output formats.
     osh: .osh visible-tags output (--out-osh, osmconvert.c:64,

@@ -55,3 +55,27 @@ def test_raster_grid_sums_match_vector_counts(spark):
     vals = [int(t) for t in row.grid_str.split(",")]
     assert len(vals) == 256
     assert sum(vals) == row.n_docs
+
+
+def test_tile_blur_kernel_exact(spark):
+    """Single-cell impulse spreads the exact binomial kernel;
+    total mass is conserved away from borders."""
+    from pyspark.sql import functions as F
+
+    from osmgraft.geo.cells import _lon_bits
+    from osmgraft.operators.tiles import tile_blur
+
+    bits = _lon_bits(20)
+    mid = 800 * (1 << bits) + 1200  # interior cell
+    rollup = spark.createDataFrame(
+        [(mid, 16)], "cell long, n long"
+    )
+    got = {
+        r.cell: (r.smoothed_num, r.smoothed)
+        for r in tile_blur(rollup, shift=20).collect()
+    }
+    assert len(got) == 9
+    assert got[mid] == (64, 4)  # 4*16, div 16
+    assert got[mid + 1] == (32, 2)
+    assert got[mid + (1 << bits) + 1] == (16, 1)
+    assert sum(v[0] for v in got.values()) == 16 * 16  # mass * 16
